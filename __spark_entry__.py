@@ -1075,8 +1075,6 @@ def _q_tile_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     same constraint its shard_dir already enforces.)"""
     import os
 
-    import pandas as pd
-
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.pipeline import convert_sharded
 
@@ -1088,34 +1086,40 @@ def _q_tile_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = (f"/tmp/gpq_contract_archive_"
            f"{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}.pmtiles")
     convert_sharded(feats, out, cfg)
+    return _archive_tile_counts(spark, out)
+
+
+def _archive_tile_counts(spark: SparkSession, out: str) -> DataFrame:
+    """(tx, ty, n_points) for every addressed tile of the archive at
+    ``out``, decoded out of the file on executors; zero rows for an archive
+    with no entries."""
+    import mmap
+
+    import numpy as np
+    import pandas as pd
 
     from gpq_tiles_spark.kernels.pmtiles import PMTilesReader
 
-    rdr = PMTilesReader(out)
-    # one row per ADDRESSED tile (run-length entries re-expand; dedup runs
-    # share a blob range, and each addressed id must still decode)
-    rows = [
-        (int(e.tile_id) + k, int(e.offset), int(e.length))
-        for e in rdr.iter_entries()  # lazy: one decoded leaf at a time
-        for k in range(max(e.run_length, 1))
-    ]
-    import numpy as np
-
+    with PMTilesReader(out) as rdr:
+        # one row per ADDRESSED tile (run-length entries re-expand; dedup
+        # runs share a blob range, and each addressed id must still decode)
+        rows = [
+            (int(e.tile_id) + k, int(e.offset), int(e.length))
+            for e in rdr.iter_entries()  # lazy: one decoded leaf at a time
+            for k in range(max(e.run_length, 1))
+        ]
     pdf_rows = pd.DataFrame(rows, columns=["tile_id", "off", "len"],
                             dtype=np.int64)
-    df = spark.createDataFrame(pdf_rows)
+    df = spark.createDataFrame(pdf_rows, schema="tile_id long, off long, len long")
 
     def dec(batches):
         from gpq_tiles_spark.kernels.hilbert import tile_id_to_zxy_vec
         from gpq_tiles_spark.kernels.mvt import decode_tile
         from gpq_tiles_spark.kernels.pmtiles import Header, HEADER_SIZE, decompress
 
-        with open(out, "rb") as f:
-            hdr = Header.from_bytes(f.read(HEADER_SIZE))
-            f.seek(0)
-            import mmap
-
-            mm = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
+        with open(out, "rb") as f, \
+                mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
+            hdr = Header.from_bytes(mm[:HEADER_SIZE])
             base = hdr.tile_data_offset
             for pdf in batches:
                 tids = pdf["tile_id"].to_numpy(dtype=np.int64)

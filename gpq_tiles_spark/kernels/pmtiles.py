@@ -547,6 +547,12 @@ class PMTilesReader:
             self.data.close()
         self._f.close()
 
+    def __enter__(self) -> "PMTilesReader":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
     def __del__(self):  # pragma: no cover - GC-timing dependent
         try:
             self.close()

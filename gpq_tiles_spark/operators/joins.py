@@ -69,15 +69,39 @@ def auto_cover_zoom(zones: DataFrame, zone_wkb: str = "zone_wkb",
     zoom 7 -> 288M candidates for 4M points; at the auto zoom -> ~1 per
     point)."""
     rows = zones.select(zone_wkb).limit(sample).collect()
-    if not rows:
+    bboxes = (G.bbox(G.from_wkb(bytes(r[0]))) for r in rows)
+    return _zoom_for_widths([x1 - x0 for x0, _, x1, _ in bboxes])
+
+
+def _zoom_for_widths(widths) -> int:
+    """The auto cover zoom rule: the finest zoom whose cell width is at
+    least the median bbox width (each floored at 1e-9), clipped to
+    [0, 18]; 9 for no zones."""
+    if not widths:
         return 9
-    widths = []
-    for r in rows:
-        x0, _, x1, _ = G.bbox(G.from_wkb(bytes(r[0])))
-        widths.append(max(x1 - x0, 1e-9))
-    med = float(np.median(widths))
-    z = int(np.clip(np.floor(np.log2(360.0 / med)), 0, 18))
-    return z
+    med = float(np.median([max(w, 1e-9) for w in widths]))
+    return int(np.clip(np.floor(np.log2(360.0 / med)), 0, 18))
+
+
+def _driver_cell_cover(zrows, zoom: int | str
+                       ) -> tuple[dict, pd.DataFrame, int]:
+    """Broadcast-path cover from collected (zone_id, wkb) rows ->
+    ({zone_id: geometry}, cover rows (zone_id, cell), zoom). Each WKB is
+    parsed once; ``zoom='auto'`` samples the first 512 zones, as
+    ``auto_cover_zoom`` does. The cover rows equal polygon_cell_cover's."""
+    geoms = {r[0]: G.from_wkb(bytes(r[1])) for r in zrows}
+    bboxes = {zid: G.bbox(g) for zid, g in geoms.items()}
+    if zoom == "auto":
+        zoom = _zoom_for_widths(
+            [x1 - x0 for x0, _, x1, _ in list(bboxes.values())[:512]])
+    ids, cells_out = [], []
+    for zid, (x0, y0, x1, y1) in bboxes.items():
+        _, cc = C.cover_bbox_cells([x0], [y0], [x1], [y1], zoom)
+        ids.extend([zid] * len(cc))
+        cells_out.extend(cc.tolist())
+    cover = pd.DataFrame({"zone_id": pd.Series(ids, dtype=object),
+                          "cell": pd.Series(cells_out, dtype=np.int64)})
+    return geoms, cover, zoom
 
 
 def point_in_polygon_join(points: DataFrame, zones: DataFrame,
@@ -88,32 +112,17 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
                           broadcast_zones: bool = True) -> DataFrame:
     """Exact PIP join -> (point_id, lng, lat, zone_id). ``zoom='auto'``
     (default) sizes the cell grid to the zones (see auto_cover_zoom)."""
-    zmap = None
+    geoms = None
     if broadcast_zones:
         # the broadcastable-zones path collects the zone table anyway (the
         # refine kernel needs every polygon on every executor) — so build
         # the cell cover driver-side from that ONE collect instead of
         # paying a mapInPandas job for it plus a second collect (round 7;
-        # guide §1.2). The cover rows are identical to polygon_cell_cover.
-        zrows = zones.select(zone_id, zone_wkb).collect()
-        zmap = {r[0]: bytes(r[1]) for r in zrows}
-        if zoom == "auto":
-            widths = [
-                max(G.bbox(G.from_wkb(w))[2] - G.bbox(G.from_wkb(w))[0], 1e-9)
-                for w in list(zmap.values())[:512]
-            ]
-            zoom = (int(np.clip(np.floor(np.log2(360.0 / float(np.median(widths)))),
-                                0, 18)) if widths else 9)
-        ids, cells_out = [], []
-        for zid, wkb in zmap.items():
-            x0, y0, x1, y1 = G.bbox(G.from_wkb(wkb))
-            _, cc = C.cover_bbox_cells([x0], [y0], [x1], [y1], zoom)
-            ids.extend([zid] * len(cc))
-            cells_out.extend(cc.tolist())
+        # guide §1.2).
+        geoms, cover_pdf, zoom = _driver_cell_cover(
+            zones.select(zone_id, zone_wkb).collect(), zoom)
         cover = F.broadcast(points.sparkSession.createDataFrame(
-            pd.DataFrame({"zone_id": pd.Series(ids, dtype=object),
-                          "cell": pd.Series(cells_out, dtype=np.int64)}),
-            schema="zone_id string, cell long"))
+            cover_pdf, schema="zone_id string, cell long"))
     else:
         if zoom == "auto":
             zoom = auto_cover_zoom(zones, zone_wkb)
@@ -133,9 +142,7 @@ def point_in_polygon_join(points: DataFrame, zones: DataFrame,
         ]
     )
 
-    if zmap is not None:
-        geoms = {k: G.from_wkb(v) for k, v in zmap.items()}
-
+    if geoms is not None:
         def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 keep = np.zeros(len(pdf), dtype=bool)
@@ -201,7 +208,11 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
     radius r differs from the probe by > (r-1) full cell widths in lng or by
     > (r-1) minimum cell heights in lat, so once the kth candidate distance
     is <= ((r-1) * min_cell_extent)^2 no farther ring can improve the result.
+    ``max_radius`` (>= 1) caps the disk radius: the round at that radius is
+    returned as is, so only points inside it are ever candidates.
     """
+    if max_radius < 1:
+        raise ValueError(f"knn_join: max_radius must be >= 1, got {max_radius}")
     # single early-stopping pass: take(cap+1) bounds driver memory AND
     # detects the over-cap case without a separate count() job re-running
     # the probe lineage
@@ -240,8 +251,9 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
     # resolve when the kth distance is exactly 0, and in that case the
     # r=2 top-k is the identical row set (disk(2) contains disk(1) and the
     # ordering tie-breaks on point_id). Starting at 2 removes one full
-    # join+window+collect Spark round from every call.
-    r = 2
+    # join+window+collect Spark round from every call. A max_radius of 1
+    # still caps the disk at 1.
+    r = min(2, max_radius)
     while True:
         idx, cells = C.grid_disk(p_cell, r, zoom)
         cand_cells = spark.createDataFrame(
@@ -269,7 +281,7 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
         # (round 7; guide §1.2). Collecting here also releases the points
         # cache as soon as the last round finishes.
         rows = topk.collect()
-        bound = ((r - 1) * min_cell_h) ** 2 if r > 1 else 0.0
+        bound = ((r - 1) * min_cell_h) ** 2
         cnt: dict = {}
         kth: dict = {}
         for row in rows:
@@ -285,7 +297,7 @@ def knn_join(points: DataFrame, probes: DataFrame, k: int,
         if done or r >= max_radius:
             pts.unpersist()
             return spark.createDataFrame(rows, schema=topk.schema)
-        r *= 2
+        r = min(2 * r, max_radius)
 
 
 def knn_join_distributed(points: DataFrame, probes: DataFrame, k: int,

@@ -102,3 +102,18 @@ def test_fmix64_sql_bit_exact_vs_kernel():
     con.close()
     want = fmix64(ids).astype(np.float64) / float(0xFFFFFFFFFFFFFFFF)
     assert np.array_equal(got, want)
+
+
+def test_tile_archive_decode_of_empty_archive(spark, tmp_path):
+    """The tile-archive query's decode pass returns zero rows for an archive
+    with no entries (an inferred schema used to fail on the empty frame)."""
+    from gpq_tiles_spark.config import TilerConfig
+    from gpq_tiles_spark.extract import FEATURES_SCHEMA
+    from gpq_tiles_spark.pipeline import convert_sharded
+
+    out = str(tmp_path / "empty.pmtiles")
+    convert_sharded(spark.createDataFrame([], schema=FEATURES_SCHEMA), out,
+                    TilerConfig(min_zoom=8, max_zoom=8, shuffle_partitions=2))
+    df = entry_mod._archive_tile_counts(spark, out)
+    assert df.columns == ["tx", "ty", "n_points"]
+    assert df.collect() == []

@@ -190,3 +190,52 @@ def test_pip_non_broadcast_matches_broadcast(spark):
     b = {(r.point_id, r.zone_id) for r in point_in_polygon_join(
         pts, zones, broadcast_zones=False).collect()}
     assert a == b and len(a) > 50
+
+
+def test_knn_join_max_radius_caps_the_disk(spark, spatial_dfs):
+    """max_radius=1 stops at the radius-1 disk (the first round used to run
+    at r=2 whatever the cap): each probe gets the top-k of exactly the
+    points whose cell lies in its 3x3 block; max_radius < 1 is refused."""
+    pts, _, (lng, lat), _ = spatial_dfs
+    probe_rows = [(0, 1.52, 42.51), (1, -122.39, 37.81), (2, 0.0, 0.0)]
+    probes = spark.createDataFrame(
+        probe_rows, schema="probe_id long, lng double, lat double")
+    zoom, k = 10, 2000
+    got = {}
+    for r in knn_join(pts, probes, k=k, zoom=zoom, max_radius=1).collect():
+        got.setdefault(r.probe_id, []).append((r.rnk, r.point_id))
+    pt_cell = C.latlng_to_cell(lng, lat, zoom)
+    for pid, plng, plat in probe_rows:
+        pc = C.latlng_to_cell(np.array([plng]), np.array([plat]), zoom)
+        _, disk = C.grid_disk(pc, 1, zoom)
+        inside = np.flatnonzero(np.isin(pt_cell, disk))
+        d = (lng[inside] - plng) ** 2 + (lat[inside] - plat) ** 2
+        order = inside[np.lexsort((inside, d))][:k]
+        expect = [(i + 1, int(p)) for i, p in enumerate(order)]
+        assert sorted(got.get(pid, [])) == expect, f"probe {pid}"
+    # the cap binds: a city probe has more points in its radius-2 disk
+    pc = C.latlng_to_cell(np.array([1.52]), np.array([42.51]), zoom)
+    assert len(got[0]) < int(np.isin(pt_cell, C.grid_disk(pc, 2, zoom)[1]).sum())
+    with pytest.raises(ValueError, match="max_radius"):
+        knn_join(pts, probes, k=3, max_radius=0)
+
+
+def test_pip_auto_zoom_same_on_both_paths(spark, spatial_dfs):
+    """The broadcast path (driver-built cover) and the non-broadcast path
+    (auto_cover_zoom) apply one zoom rule to the same sample, and the
+    driver cover rows equal polygon_cell_cover's."""
+    from gpq_tiles_spark.operators.joins import (
+        _driver_cell_cover,
+        auto_cover_zoom,
+        polygon_cell_cover,
+    )
+
+    _, zones, _, _ = spatial_dfs
+    _, cover, zoom = _driver_cell_cover(
+        zones.select("zone_id", "zone_wkb").collect(), "auto")
+    assert zoom == auto_cover_zoom(zones)
+    assert 0 < zoom < 18
+    got = set(zip(cover["zone_id"], cover["cell"].tolist()))
+    want = {(r.zone_id, r.cell)
+            for r in polygon_cell_cover(zones, zoom=zoom).collect()}
+    assert got == want
