@@ -22,16 +22,21 @@ __version__ = "0.1.0"
 from .config import TilerConfig  # noqa: F401
 
 
+_PIPELINE_NAMES = ("convert", "convert_sharded", "fanout_records",
+                   "encode_tiles", "encode_tiles_premerge",
+                   "encode_tiles_premerge_props", "encode_props_column",
+                   "encode_single_tile", "ProgressEvent", "PipelineMetrics")
+_EXTRACT_NAMES = ("extract_features", "span_sequences")
+__all__ = ["TilerConfig", *_PIPELINE_NAMES, *_EXTRACT_NAMES,
+           "read_tile", "decode_tile"]
+
+
 def __getattr__(name):  # lazy: keep kernel-only imports Spark-free
-    if name in ("convert", "convert_sharded", "fanout_records", "encode_tiles",
-                "encode_tiles_salted", "encode_tiles_premerge",
-                "encode_tiles_premerge_props", "encode_props_column",
-                "detect_hot_tiles", "encode_single_tile",
-                "ProgressEvent", "PipelineMetrics"):
+    if name in _PIPELINE_NAMES:
         from . import pipeline
 
         return getattr(pipeline, name)
-    if name in ("extract_features", "span_sequences"):
+    if name in _EXTRACT_NAMES:
         from . import extract
 
         return getattr(extract, name)

@@ -59,8 +59,6 @@ class TilerConfig:
     # value, so single-writer/distributed byte parity holds at any setting.
     leaf_max_entries: int | None = None
     shuffle_partitions: int | None = None  # None -> leave session conf alone
-    hot_tile_threshold: int = 200_000  # features per tile before salted two-phase encode
-    salt_buckets: int = 16
 
     def validate(self) -> "TilerConfig":
         if not (0 <= self.min_zoom <= self.max_zoom <= 30):

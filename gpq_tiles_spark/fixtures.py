@@ -19,7 +19,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 CITIES = [(1.5, 42.5), (-122.4, 37.8), (139.7, 35.7)]  # Andorra-ish, SF, Tokyo
-HOT_CELL = (-122.419, 37.775)  # one z14 hot cell (salted-repartition exercise)
+HOT_CELL = (-122.419, 37.775)  # one z14 hot cell (hot-tile skew exercise)
 ANTIMERIDIAN = (178.0, -18.0)
 
 SPAN_TYPE = pa.struct(

@@ -144,7 +144,7 @@ def tile_budget_keep_mask(fids: np.ndarray, framed_lens: np.ndarray,
     spent. Properties of the rule:
 
     * order-independent: the mask depends only on the (fid, framed_len) SET
-      of the tile, so the single-writer, sharded, salted, premerge, and WKB
+      of the tile, so the single-writer, sharded, premerge, and WKB
       layouts all compute the SAME mask -> archives stay byte-identical;
     * deterministic: no RNG, stable across runs/partitionings (hash ties
       broken by fid, which is unique within a tile);
@@ -156,10 +156,10 @@ def tile_budget_keep_mask(fids: np.ndarray, framed_lens: np.ndarray,
     n = len(framed_lens)
     if n == 0 or int(framed_lens.sum()) <= budget:
         return np.ones(n, dtype=bool)
-    # zero-length (dead) records cost nothing and are always kept — the
-    # salted phase-A layout drops them from its message lists, so the
-    # budget competition must run over the LIVE records only for the kept
-    # byte set to be identical across layouts
+    # zero-length (dead) records cost nothing and are always kept; the
+    # budget competition runs over the LIVE records only, so a dead record
+    # never takes the never-empty slot and the kept byte set does not
+    # depend on whether a layout's lists carry dead records
     fids = np.asarray(fids, dtype=np.int64)
     nz = np.flatnonzero(framed_lens > 0)
     h = fmix64(fids[nz].astype(np.uint64) ^ fmix64(np.uint64(tile_id)))

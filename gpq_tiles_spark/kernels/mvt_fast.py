@@ -134,7 +134,7 @@ def encode_record_msgs(tid: np.ndarray, fid: np.ndarray, wkbs: np.ndarray,
     zzx = (((px << 1) ^ (px >> 63)) & 0xFFFFFFFF).astype(np.uint64)
     zzy = (((py << 1) ^ (py >> 63)) & 0xFFFFFFFF).astype(np.uint64)
 
-    buf, rec_off, _ms, _ml, _lv = _assemble_feature_messages(
+    buf, rec_off = _assemble_feature_messages(
         n, fid, wkbs, lens, gidx, lng0, lat0, lng1, lat1, extent, buffer_px,
         is_pt, zzx, zzy,
         is_p1, p1_idx, p1_buf, p1_boff, p1_blen,
@@ -200,85 +200,6 @@ def wrap_sorted_msgs(tid: np.ndarray, msgs, layer_name: str, extent: int,
         "n_features": out_nf,
         "mvt": out_mvt,
         "content_hash": np.array(out_hash, dtype=np.int64),
-    }
-
-
-def encode_partial_runs(run_key: np.ndarray, tid: np.ndarray,
-                        fid: np.ndarray, wkbs: np.ndarray,
-                        extent: int, buffer_px: float = 8.0):
-    """Phase A of the salted two-phase encode: per consecutive
-    (tile_id[, salt]) run, produce the per-feature protobuf messages WITHOUT
-    wrapping them in a layer. Feature messages are independent byte segments
-    (the MVT cursor resets per feature), so buckets can be merged later in
-    feature_id order for byte-identical output.
-
-    Returns dict with per-run: tile_id, z, x, y, n_records, fids, msgs.
-    """
-    n = len(tid)
-    starts = np.flatnonzero(np.concatenate(([True], run_key[1:] != run_key[:-1])))
-    ends = np.append(starts[1:], n)
-    g_z, g_x, g_y = Hc.tile_id_to_zxy_vec(tid[starts])
-    lng0, lat0, lng1, lat1 = T.tile_bounds_mixed(g_x, g_y, g_z)
-    sizes = ends - starts
-    gidx = np.repeat(np.arange(len(starts)), sizes)
-    lens = np.fromiter((len(w) for w in wkbs), dtype=np.int64, count=n)
-    buf8, woffs, wkb_cat = _concat_wkbs(wkbs, lens)
-    is_pt, px, py = _bulk_points(buf8, woffs, lens, gidx,
-                                 lng0, lat0, lng1, lat1, extent, wkb_cat)
-    is_p1, p1_start, p1_npts, p1_inter = _bulk_poly1(
-        buf8, woffs, wkb_cat, gidx, lens, lng0, lat0, lng1, lat1, extent)
-    is_ls, ls_start, ls_npts, ls_inter = _bulk_lines(
-        buf8, woffs, wkb_cat, gidx, lens, lng0, lat0, lng1, lat1, extent)
-    p1_idx = np.full(n, -1, dtype=np.int64)
-    p1_buf = b""
-    p1_boff = p1_blen = None
-    if is_p1.any():
-        p1_rows = np.flatnonzero(is_p1)
-        p1_idx[p1_rows] = np.arange(len(p1_rows))
-        p1_buf, p1_boff, p1_blen = _batch_geom_fields(
-            p1_start, p1_npts, p1_rows, p1_inter, "poly")
-    ls_idx = np.full(n, -1, dtype=np.int64)
-    ls_buf = b""
-    ls_boff = ls_blen = None
-    if is_ls.any():
-        ls_rows = np.flatnonzero(is_ls)
-        ls_idx[ls_rows] = np.arange(len(ls_rows))
-        ls_buf, ls_boff, ls_blen = _batch_geom_fields(
-            ls_start, ls_npts, ls_rows, ls_inter, "line")
-    zzx = (((px << 1) ^ (px >> 63)) & 0xFFFFFFFF).astype(np.uint64)
-    zzy = (((py << 1) ^ (py >> 63)) & 0xFFFFFFFF).astype(np.uint64)
-
-    # shared vectorized assembly; phase A stores UNFRAMED messages (the
-    # phase-B merge adds the 0x12 frames), so slice [msg_start : +msg_len]
-    buf, _rec_off, msg_start, msg_len, live = _assemble_feature_messages(
-        n, fid, wkbs, lens, gidx, lng0, lat0, lng1, lat1, extent, buffer_px,
-        is_pt, zzx, zzy,
-        is_p1, p1_idx, p1_buf, p1_boff, p1_blen,
-        is_ls, ls_idx, ls_buf, ls_boff, ls_blen,
-    )
-    buf_bytes = buf.tobytes()
-    fid_l = fid.tolist()
-    out_fids: list[list[int]] = []
-    out_msgs: list[list[bytes]] = []
-    for gi in range(len(starts)):
-        s, e = starts[gi], ends[gi]
-        fids_g: list[int] = []
-        msgs_g: list[bytes] = []
-        for i in range(s, e):
-            if not live[i]:
-                continue
-            fids_g.append(fid_l[i])
-            msgs_g.append(buf_bytes[msg_start[i]:msg_start[i] + msg_len[i]])
-        out_fids.append(fids_g)
-        out_msgs.append(msgs_g)
-    return {
-        "tile_id": tid[starts],
-        "z": g_z.astype(np.int32),
-        "x": g_x,
-        "y": g_y,
-        "n_records": sizes.astype(np.int64),
-        "fids": out_fids,
-        "msgs": out_msgs,
     }
 
 
@@ -682,7 +603,7 @@ def encode_sorted_runs(tid: np.ndarray, fid: np.ndarray, wkbs: np.ndarray,
     layer_head = b"\x0a" + _varint(len(layer_name)) + layer_name.encode()
     layer_tail = b"\x28" + _varint(extent) + b"\x78\x02"  # extent(5), version(15)=2
 
-    buf, rec_off, msg_start, msg_len, live = _assemble_feature_messages(
+    buf, rec_off = _assemble_feature_messages(
         n, fid, wkbs, lens, gidx, lng0, lat0, lng1, lat1, extent, buffer_px,
         is_pt, zzx, zzy,
         is_p1, p1_idx,
@@ -741,11 +662,10 @@ def _assemble_feature_messages(n, fid, wkbs, lens, gidx,
     message ([0x12][varint(len)][0x08][varint(fid)][type+geometry]) laid out
     into ONE uint8 buffer with computed offsets — zero per-record Python in
     the hot path; byte-identical to the per-record concat. Shared by the
-    single-phase encoder (slices whole-tile record ranges) and the salted
-    phase-A encoder (slices per-record UNFRAMED messages at
-    [msg_start : msg_start+msg_len]).
+    single-phase encoder (slices whole-tile record ranges) and the premerge
+    map side (slices one framed record each).
 
-    Returns (buf uint8, rec_off (n+1,), msg_start (n,), msg_len (n,), live).
+    Returns (buf uint8, rec_off (n+1,)); a dead record spans zero bytes.
     """
     CAT_RECT, CAT_PT, CAT_P1, CAT_LS, CAT_EXACT = 0, 1, 2, 3, 4
     cat = np.full(n, CAT_EXACT, dtype=np.int64)
@@ -892,4 +812,4 @@ def _assemble_feature_messages(n, fid, wkbs, lens, gidx,
     for i, fm in exact_msgs.items():
         buf[msg_start[i]:msg_start[i] + len(fm)] = np.frombuffer(fm, dtype=np.uint8)
 
-    return buf, rec_off, msg_start, msg_len, live
+    return buf, rec_off

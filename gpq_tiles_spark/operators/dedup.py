@@ -395,6 +395,12 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     exact — dropping common grams only costs recall for pairs whose overlap
     is exclusively ubiquitous grams, which a threshold >= 0.8 filter would
     reject anyway.
+
+    Cache contract: the call is EAGER. It runs one job that materializes
+    the result into its own cache (``persist()`` at the default storage
+    level) and releases its intermediate gram cache before returning, so
+    the returned frame is the only thing left cached. The caller owns that
+    cache and should call ``.unpersist()`` on the result when done with it.
     """
     grams = spread_small_input(df).select(
         F.col(id_col).alias("doc_id"),

@@ -21,10 +21,11 @@ Spark-first formulation of the reference's 3-phase engine
       run-length, directory, header) -> single .pmtiles
 
 Scale notes (10^12 docs):
-* exactly ONE wide shuffle (the range partition by tile_id); everything else
-  is narrow. Skewed hot tiles are split by a salt column and re-merged in
-  tile_id order inside the encode stage (two-phase encode) when a tile
-  exceeds ``hot_tile_threshold``.
+* exactly ONE wide shuffle (``_shuffle_on_tile``); everything else is
+  narrow. A hot tile's per-record geometry work stays spread over the map
+  stage on the premerge layout (map-side message encode), so its reduce
+  task only concatenates; ``max_tile_bytes`` bounds the size of any one
+  tile.
 * the fully-inside fast path (clip.rs:196-203) is fully vectorized: features
   whose bbox sits inside the buffered tile reuse one WKB + one drop-hash per
   feature across every tile they land in; only boundary-crossing pairs take
@@ -991,10 +992,10 @@ def make_encoder(config: TilerConfig, metrics: PipelineMetrics | None = None):
     """Encode consecutive (tile_id-sorted) runs into MVT bytes.
 
     Input batches are sorted by (tile_id, feature_id) within the partition and
-    each tile_id is wholly contained in one partition (range partitioning), so
-    grouping consecutive runs — carrying the tail across batch boundaries —
-    reproduces the reference's phase-3 streaming group-by
-    (pipeline.rs:1179-1282) with zero extra shuffle.
+    each tile_id is wholly contained in one partition (the tile shuffle), so
+    grouping consecutive runs (``_run_carry``) reproduces the reference's
+    phase-3 streaming group-by (pipeline.rs:1179-1282) with zero extra
+    shuffle.
     """
     layer_name, extent = config.layer_name, config.extent
     buffer_px = config.buffer_pixels
@@ -1022,25 +1023,7 @@ def make_encoder(config: TilerConfig, metrics: PipelineMetrics | None = None):
             metrics.records_capped.add(cap_stats[1])
         return pd.DataFrame(cols)
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pend: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pend is not None:
-                pdf = pd.concat([pend, pdf], ignore_index=True)
-                pend = None
-            tids = pdf["tile_id"].to_numpy()
-            # hold back the last run — it may continue in the next batch
-            cut = int(np.searchsorted(tids, tids[-1], side="left"))
-            pend = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            if len(body):
-                yield encode_chunk(body)
-        if pend is not None and len(pend):
-            yield encode_chunk(pend)
-
-    return encode
+    return _run_carry(encode_chunk)
 
 
 MSG_RECORDS_SCHEMA = StructType(
@@ -1125,7 +1108,7 @@ def _run_carry(chunk_fn):
 def make_wrap_encoder(config: TilerConfig,
                       metrics: PipelineMetrics | None = None):
     """Premerge reduce side: concatenate each tile's (feature_id-sorted)
-    framed messages and wrap the layer — same run-carry pattern as
+    framed messages and wrap the layer — same run carry as
     ``make_encoder``, but the per-record geometry work already happened
     map-side."""
     layer_name, extent = config.layer_name, config.extent
@@ -1160,24 +1143,10 @@ def encode_tiles_premerge(features: DataFrame, config: TilerConfig,
     """features -> per-tile MVT rows on the premerge layout: map-side
     fan-out + per-record message encode, ONE shuffle of the small framed
     messages on tile_id (hash by default; ``by_range=True`` when the
-    consumer needs globally tile-ordered partitions), reduce-side wrap.
-    The single shared constructor for every premerge plan in the repo —
-    bench, contract queries, and the sharded sink all call this."""
-    msgs = spread_small_input(features).mapInPandas(
-        make_fanout_encoded(config, metrics), schema=MSG_RECORDS_SCHEMA)
-    parts = num_partitions or config.shuffle_partitions
-    if by_range:
-        shuffled = (
-            msgs.repartitionByRange(parts, "tile_id")
-            if parts else msgs.repartitionByRange("tile_id")
-        )
-    else:
-        shuffled = (
-            msgs.repartition(parts, "tile_id")
-            if parts else msgs.repartition("tile_id")
-        )
-    return shuffled.sortWithinPartitions("tile_id", "feature_id").mapInPandas(
-        make_wrap_encoder(config, metrics), schema=TILES_SCHEMA)
+    consumer needs globally tile-ordered partitions), reduce-side wrap."""
+    return _tile_plan(features, config, premerge=True, props=False,
+                      by_range=by_range, parts=num_partitions,
+                      metrics=metrics)[0]
 
 
 # premerge pays when records are coordinate-dense: the framed message is
@@ -1208,238 +1177,6 @@ def _resolve_premerge(features: DataFrame, premerge) -> bool:
     return mean_wkb >= PREMERGE_AUTO_WKB_BYTES
 
 
-PARTIAL_SCHEMA = StructType(
-    [
-        StructField("tile_id", LongType(), False),
-        StructField("z", IntegerType(), False),
-        StructField("x", LongType(), False),
-        StructField("y", LongType(), False),
-        StructField("n_records", LongType(), False),
-        StructField("fids", ArrayType(LongType()), False),
-        StructField("msgs", ArrayType(BinaryType()), False),
-    ]
-)
-
-
-def make_partial_encoder(config: TilerConfig):
-    """Phase A of the salted two-phase encode: per (tile_id, salt) run, emit
-    unwrapped feature messages (cross-batch carry on (tile_id, salt))."""
-    extent = config.extent
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pend: pd.DataFrame | None = None
-
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            tid = pdf["tile_id"].to_numpy(dtype=np.int64)
-            run_key = tid * np.int64(config.salt_buckets) + pdf["salt"].to_numpy(
-                dtype=np.int64
-            )
-            cols = mvt_fast.encode_partial_runs(
-                run_key,
-                tid,
-                pdf["feature_id"].to_numpy(dtype=np.int64),
-                pdf["wkb"].to_numpy(),
-                extent,
-                config.buffer_pixels,
-            )
-            return pd.DataFrame(cols)
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pend is not None:
-                pdf = pd.concat([pend, pdf], ignore_index=True)
-                pend = None
-            key = (pdf["tile_id"].to_numpy(dtype=np.int64) * config.salt_buckets
-                   + pdf["salt"].to_numpy(dtype=np.int64))
-            cut = int(np.searchsorted(key, key[-1], side="left"))
-            pend = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            if len(body):
-                yield emit(body)
-        if pend is not None and len(pend):
-            yield emit(pend)
-
-    return encode
-
-
-def make_merge_encoder(config: TilerConfig, metrics: PipelineMetrics | None = None):
-    """Phase B: merge salt buckets of a tile in feature_id order and wrap the
-    layer — byte-identical to the single-phase encoder."""
-    head, tail = mvt_fast.layer_head_tail(config.layer_name, config.extent)
-    max_tile_bytes = config.max_tile_bytes
-    acc_tiles = metrics.tiles_out if metrics else None
-
-    def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pend: pd.DataFrame | None = None
-
-        def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-            tid = pdf["tile_id"].to_numpy(dtype=np.int64)
-            starts = np.flatnonzero(np.concatenate(([True], tid[1:] != tid[:-1])))
-            ends = np.append(starts[1:], len(tid))
-            rows = {k: [] for k in ("tile_id", "z", "x", "y", "n_features",
-                                    "mvt", "content_hash")}
-            for s, e in zip(starts, ends):
-                fids = np.concatenate([
-                    np.asarray(v, dtype=np.int64) for v in pdf["fids"].iloc[s:e]
-                ]) if e > s else np.empty(0, dtype=np.int64)
-                msgs: list[bytes] = []
-                for v in pdf["msgs"].iloc[s:e]:
-                    msgs.extend(bytes(m) for m in v)
-                order = np.argsort(fids, kind="stable")
-                fids = fids[order]
-                msgs = [msgs[i] for i in order]
-                n_feat = int(pdf["n_records"].iloc[s:e].sum())
-                n_dead = n_feat - len(msgs)  # dead records absent from msgs
-                if max_tile_bytes is not None:
-                    # phase-A messages are UNFRAMED; the budget counts the
-                    # FRAMED length (0x12 + varint + body) so the mask is
-                    # byte-identical to the single-phase/premerge paths
-                    flens = np.fromiter(
-                        (1 + len(mvt_fast._varint(len(m))) + len(m)
-                         for m in msgs),
-                        dtype=np.int64, count=len(msgs))
-                    if int(flens.sum()) > max_tile_bytes:
-                        from .kernels.drop import tile_budget_keep_mask
-
-                        mask = tile_budget_keep_mask(
-                            fids, flens, int(tid[s]), max_tile_bytes)
-                        msgs = [m for m, k in zip(msgs, mask) if k]
-                        if metrics is not None:
-                            metrics.tiles_capped.add(1)
-                            metrics.records_capped.add(
-                                int(len(mask) - mask.sum()))
-                        # dead records are always 'kept' by the budget rule
-                        # (they cost 0 bytes), matching encode_sorted_runs
-                        n_feat = int(mask.sum()) + n_dead
-                mvt = mvt_fast.wrap_layer(head, msgs, tail)
-                rows["tile_id"].append(int(tid[s]))
-                rows["z"].append(int(pdf["z"].iloc[s]))
-                rows["x"].append(int(pdf["x"].iloc[s]))
-                rows["y"].append(int(pdf["y"].iloc[s]))
-                rows["n_features"].append(n_feat)
-                rows["mvt"].append(mvt)
-                rows["content_hash"].append(content_hash64(mvt) & 0x7FFF_FFFF_FFFF_FFFF)
-            if acc_tiles is not None:
-                acc_tiles.add(len(rows["tile_id"]))
-            return pd.DataFrame(rows)
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pend is not None:
-                pdf = pd.concat([pend, pdf], ignore_index=True)
-                pend = None
-            tids = pdf["tile_id"].to_numpy()
-            cut = int(np.searchsorted(tids, tids[-1], side="left"))
-            pend = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            if len(body):
-                yield emit(body)
-        if pend is not None and len(pend):
-            yield emit(pend)
-
-    return merge
-
-
-def detect_hot_tiles(features: DataFrame, config: TilerConfig,
-                     threshold: int | None = None) -> list[int]:
-    """Estimate hot tiles WITHOUT materializing the fan-out: count feature
-    bbox-centers per tile at every zoom (pure Catalyst — the dominant class
-    in a hot tile is fully-inside features, whose center tile IS their
-    tile), then keep tiles above threshold.
-
-    Returns the tile_id list (small by construction: only tiles with more
-    than `threshold` co-located features).
-    """
-    from .functions.spatial_sql import tile_x_sql, tile_y_sql
-
-    threshold = threshold or config.hot_tile_threshold
-    cx = "((lng_min + lng_max) / 2.0)"
-    cy = "((lat_min + lat_max) / 2.0)"
-    # ONE scan: per-row array of (z, x, y) structs exploded, instead of a
-    # per-zoom union that re-reads (and re-extracts) the features once per
-    # zoom level
-    structs = []
-    for z in range(config.min_zoom, config.max_zoom + 1):
-        n_max = (1 << z) - 1
-        xs = f"greatest(least({tile_x_sql(cx, z)}, {n_max}), 0)"
-        ys = f"greatest(least({tile_y_sql(cy, z)}, {n_max}), 0)"
-        structs.append(f"struct({z} AS z, {xs} AS x, {ys} AS y)")
-    exploded = features.selectExpr(
-        f"explode(array({', '.join(structs)})) AS c"
-    ).select("c.z", "c.x", "c.y")
-    hot = (
-        exploded.groupBy("z", "x", "y").count()
-        .where(F.col("count") > threshold)
-        .collect()
-    )
-    if not hot:
-        return []
-    z_arr = np.array([r["z"] for r in hot])
-    x_arr = np.array([r["x"] for r in hot])
-    y_arr = np.array([r["y"] for r in hot])
-    return [int(t) for t in H.tile_id_mixed(z_arr, x_arr, y_arr)]
-
-
-def encode_tiles_salted(records: DataFrame, config: TilerConfig,
-                        num_partitions: int | None = None,
-                        hot_tile_ids: list[int] | None = None,
-                        metrics: PipelineMetrics | None = None,
-                        by_range: bool = True) -> DataFrame:
-    """Skew-safe two-phase encode [north-star: explicit salted repartitioning
-    on hot tiles]. Hot tiles get their features split across salt_buckets
-    sub-partitions for phase A, so no single reduce task ever owns a dense
-    urban tile alone; phase B merges the buckets in feature_id order —
-    output bytes identical to the single-phase path. Cold tiles take the
-    normal single-phase encode; the two outputs are unioned.
-
-    ``hot_tile_ids`` comes from ``detect_hot_tiles`` (no extra pass over the
-    fan-out); when empty this degrades to plain ``encode_tiles``.
-    """
-    parts = num_partitions or config.shuffle_partitions
-    if hot_tile_ids is None:
-        raise ValueError("pass hot_tile_ids from detect_hot_tiles(features, config)")
-    if not hot_tile_ids:
-        return encode_tiles(records, config, num_partitions, metrics=metrics,
-                            by_range=by_range)
-
-    # single-path: ONE pass over the fan-out; cold tiles carry salt=0 (one
-    # bucket, phase B is a no-op wrap), hot tiles spread over salt_buckets.
-    # Phase B's shuffle moves per-feature message bytes (~ final tile bytes),
-    # never re-clipped geometry.
-    is_hot = F.col("tile_id").isin(hot_tile_ids)
-    salted = records.withColumn(
-        "salt",
-        F.when(is_hot, F.pmod(F.col("feature_id"), F.lit(config.salt_buckets)))
-        .otherwise(F.lit(0)).cast("long"),
-    )
-    if by_range:
-        shuffled = (
-            salted.repartitionByRange(parts, "tile_id", "salt")
-            if parts else salted.repartitionByRange("tile_id", "salt")
-        )
-    else:
-        shuffled = (
-            salted.repartition(parts, "tile_id", "salt")
-            if parts else salted.repartition("tile_id", "salt")
-        )
-    partials = shuffled.sortWithinPartitions("tile_id", "salt", "feature_id").mapInPandas(
-        make_partial_encoder(config), schema=PARTIAL_SCHEMA
-    )
-    if by_range:
-        merged_in = (
-            partials.repartitionByRange(parts, "tile_id")
-            if parts else partials.repartitionByRange("tile_id")
-        ).sortWithinPartitions("tile_id")
-    else:
-        merged_in = (
-            partials.repartition(parts, "tile_id")
-            if parts else partials.repartition("tile_id")
-        ).sortWithinPartitions("tile_id")
-    return merged_in.mapInPandas(make_merge_encoder(config, metrics), schema=TILES_SCHEMA)
-
-
 def fanout_records(features: DataFrame, config: TilerConfig,
                    metrics: PipelineMetrics | None = None) -> DataFrame:
     """features -> (tile_id, z, x, y, feature_id, wkb) records."""
@@ -1464,21 +1201,9 @@ def encode_tiles(records: DataFrame, config: TilerConfig,
     (or force persisting the multi-10-GB fan-out output just to avoid
     that). The sharded sink uses this: its directory assembly re-orders
     the tiny 40-byte entry rows in a separate range shuffle."""
-    parts = num_partitions or config.shuffle_partitions
-    if by_range:
-        shuffled = (
-            records.repartitionByRange(parts, "tile_id")
-            if parts
-            else records.repartitionByRange("tile_id")
-        )
-    else:
-        shuffled = (
-            records.repartition(parts, "tile_id")
-            if parts
-            else records.repartition("tile_id")
-        )
-    sorted_recs = shuffled.sortWithinPartitions("tile_id", "feature_id")
-    return sorted_recs.mapInPandas(make_encoder(config, metrics), schema=TILES_SCHEMA)
+    return _shuffle_on_tile(
+        records, num_partitions or config.shuffle_partitions, by_range
+    ).mapInPandas(make_encoder(config, metrics), schema=TILES_SCHEMA)
 
 
 PROPS_FIELD_SCHEMA = ArrayType(
@@ -2069,7 +1794,6 @@ def encode_tiles_with_props(records: DataFrame, props: DataFrame,
     expressed declaratively so Catalyst broadcast-joins small property
     tables and shuffle-joins big ones (AQE decides at runtime). The tile
     shuffle and run-carry grouping mirror encode_tiles."""
-    parts = num_partitions or config.shuffle_partitions
     # one props row per feature_id: duplicate ids (hash-collided or
     # duplicated source ids) must not MULTIPLY fan-out records through the
     # join. The winner is the ORDERING-MINIMUM props value (not
@@ -2082,19 +1806,9 @@ def encode_tiles_with_props(records: DataFrame, props: DataFrame,
         .groupBy("feature_id").agg(F.min("props").alias("props")),
         "feature_id", "left",
     )
-    if by_range:
-        shuffled = (
-            joined.repartitionByRange(parts, "tile_id")
-            if parts else joined.repartitionByRange("tile_id")
-        )
-    else:
-        shuffled = (
-            joined.repartition(parts, "tile_id")
-            if parts else joined.repartition("tile_id")
-        )
-    sorted_recs = shuffled.sortWithinPartitions("tile_id", "feature_id")
-    return sorted_recs.mapInPandas(make_props_encoder(config, metrics),
-                                   schema=TILES_SCHEMA)
+    return _shuffle_on_tile(
+        joined, num_partitions or config.shuffle_partitions, by_range
+    ).mapInPandas(make_props_encoder(config, metrics), schema=TILES_SCHEMA)
 
 
 MSG_PROPS_SCHEMA = StructType(
@@ -2254,21 +1968,53 @@ def encode_tiles_premerge_props(features: DataFrame, config: TilerConfig,
     corpora get the same ~2.6x vertex-dense premerge win as the
     propertyless path (round 5; previously write_properties forced the
     WKB-shuffling layout)."""
-    msgs = spread_small_input(features).mapInPandas(
-        make_fanout_encoded_props(config, metrics), schema=MSG_PROPS_SCHEMA)
-    parts = num_partitions or config.shuffle_partitions
+    return _tile_plan(features, config, premerge=True, props=True,
+                      by_range=by_range, parts=num_partitions,
+                      metrics=metrics)[0]
+
+
+def _shuffle_on_tile(df: DataFrame, parts: int | None,
+                     by_range: bool) -> DataFrame:
+    """The ONE wide shuffle of every tile plan: co-locate each tile_id
+    (hash partitioning, or range partitioning when the consumer needs
+    globally tile-ordered partitions) and sort each partition by
+    (tile_id, feature_id), the order every reduce-side run carry reads."""
     if by_range:
-        shuffled = (
-            msgs.repartitionByRange(parts, "tile_id")
-            if parts else msgs.repartitionByRange("tile_id")
-        )
+        out = (df.repartitionByRange(parts, "tile_id") if parts
+               else df.repartitionByRange("tile_id"))
     else:
-        shuffled = (
-            msgs.repartition(parts, "tile_id")
-            if parts else msgs.repartition("tile_id")
-        )
-    return shuffled.sortWithinPartitions("tile_id", "feature_id").mapInPandas(
-        make_wrap_props_encoder(config, metrics), schema=TILES_SCHEMA)
+        out = (df.repartition(parts, "tile_id") if parts
+               else df.repartition("tile_id"))
+    return out.sortWithinPartitions("tile_id", "feature_id")
+
+
+def _tile_plan(features: DataFrame, config: TilerConfig, premerge: bool,
+               props: bool, by_range: bool, parts: int | None = None,
+               metrics: PipelineMetrics | None = None
+               ) -> tuple[DataFrame, DataFrame]:
+    """features -> (tiles, map side): the one dispatch over the four
+    (props, premerge) encode layouts, which all produce the same tile
+    bytes. The map side is the frame the tile shuffle reads (fan-out WKB
+    records, or framed messages on the premerge layout); a sink that
+    range-partitions persists it, since repartitionByRange's sampling job
+    would otherwise run the fan-out a second time."""
+    if not premerge:
+        side = fanout_records(features, config, metrics)
+        if props:
+            return encode_tiles_with_props(
+                side, features.select("feature_id", "props"), config, parts,
+                metrics, by_range), side
+        return encode_tiles(side, config, parts, metrics, by_range), side
+    make_map, schema, make_reduce = (
+        (make_fanout_encoded_props, MSG_PROPS_SCHEMA, make_wrap_props_encoder)
+        if props else
+        (make_fanout_encoded, MSG_RECORDS_SCHEMA, make_wrap_encoder))
+    side = spread_small_input(features).mapInPandas(
+        make_map(config, metrics), schema=schema)
+    tiles = _shuffle_on_tile(
+        side, parts or config.shuffle_partitions, by_range
+    ).mapInPandas(make_reduce(config, metrics), schema=TILES_SCHEMA)
+    return tiles, side
 
 
 def encode_single_tile(features: list[tuple[int, bytes]], z: int, x: int, y: int,
@@ -2279,7 +2025,11 @@ def encode_single_tile(features: list[tuple[int, bytes]], z: int, x: int, y: int
     tile, backfilling a tile server, or diffing against the distributed
     pipeline's output for the same (z, x, y). Returns None when nothing
     survives. Features are encoded in feature_id order (the pipeline's
-    in-partition sort order), so bytes match the distributed encode."""
+    in-partition sort order), so bytes match the distributed encode: a
+    feature counts only when its bbox tile range holds the tile (the
+    fan-out's assignment), and where the fan-out's grid regime classifies
+    the tile as interior to a large polygon it gets the same canonical
+    buffered rect instead of a clip."""
     config = (config or TilerConfig()).validate()
     lng0, lat0, lng1, lat1 = (
         float(v[0]) for v in T.tile_bounds(np.array([x]), np.array([y]), z)
@@ -2288,13 +2038,30 @@ def encode_single_tile(features: list[tuple[int, bytes]], z: int, x: int, y: int
     msgs: list[bytes] = []
     for fid, wkb in sorted(features, key=lambda t: t[0]):
         g = G.from_wkb(wkb)
+        bx0, by0, bx1, by1 = G.bbox(g)
+        x0a, x1a, x0b, x1b, gy0, gy1 = (int(v[0]) for v in T.tile_ranges_for_bbox(
+            [bx0], [by0], [bx1], [by1], z))
+        in_a = x0a <= x <= x1a
+        if not (gy0 <= y <= gy1 and (in_a or x0b <= x <= x1b)):
+            continue
         simplified = SK.simplify_for_zoom(g, config.max_zoom, config.extent,
                                           config.simplification)
-        clipped = CK.clip_geometry(simplified, lng0, lat0, lng1, lat1, buf_deg)
-        if clipped is None:
-            continue
-        w = _finish_clip(clipped, z, config.max_zoom, config.extent,
-                         lng0, lat0, lng1, lat1, int(fid))
+        n_cand = (max(x1a - x0a + 1, 0) + max(x1b - x0b + 1, 0)) * (gy1 - gy0 + 1)
+        rx0, rx1 = (x0a, x1a) if in_a else (x0b, x1b)
+        if (g[0] in (G.POLYGON, G.MULTIPOLYGON)
+                and simplified[0] in (G.POLYGON, G.MULTIPOLYGON)
+                and n_cand > GC.GRID_THRESHOLD
+                and GC.tile_is_interior(simplified, z, x, y, rx0, rx1, gy0,
+                                        gy1, config.buffer_pixels,
+                                        config.extent)):
+            w = GC.rect_wkb(lng0 - buf_deg, lat0 - buf_deg,
+                            lng1 + buf_deg, lat1 + buf_deg)
+        else:
+            clipped = CK.clip_geometry(simplified, lng0, lat0, lng1, lat1,
+                                       buf_deg)
+            w = None if clipped is None else _finish_clip(
+                clipped, z, config.max_zoom, config.extent,
+                lng0, lat0, lng1, lat1, int(fid))
         if w is None:
             continue
         cmds, gtype = M.encode_geometry(G.from_wkb(w), lng0, lat0, lng1, lat1,
@@ -2992,29 +2759,54 @@ def _finalize_sharded_distributed(entries_df: DataFrame,
     }
 
 
+WORLD_BOUNDS = (-180.0, -85.0511287798066, 180.0, 85.0511287798066)
+
+
+def _resolve_inputs(features: DataFrame, config: TilerConfig,
+                    bounds: tuple | None, premerge) -> tuple[tuple, bool]:
+    """The sinks' shared prologue -> (bounds, premerge as a bool).
+
+    Without given bounds, ONE job computes them and also the
+    premerge='auto' statistic, the mean WKB payload over every row (the
+    choice only pins WHICH plan runs; bytes are identical on either
+    layout, and the mean is deterministic for a fixed input). With given
+    bounds, 'auto' takes ``_resolve_premerge``'s early-stopping sample.
+    Empty input gets world bounds: a valid, empty archive."""
+    if config.write_properties and "props" not in features.columns:
+        raise ValueError(
+            "write_properties=True requires a 'props' column "
+            "(array<struct<key string, val binary>>) — build it with "
+            "encode_props_column(df, cols)"
+        )
+    if bounds is not None:
+        return bounds, _resolve_premerge(features, premerge)
+    auto = premerge == "auto"
+    cols = [F.min("lng_min"), F.min("lat_min"),
+            F.max("lng_max"), F.max("lat_max")]
+    if auto:
+        cols.append(F.avg(F.length("wkb")))
+    row = features.agg(*cols).collect()[0]
+    bounds = WORLD_BOUNDS if row[0] is None else tuple(row[:4])
+    if auto:
+        premerge = row[4] is not None and row[4] >= PREMERGE_AUTO_WKB_BYTES
+    return bounds, bool(premerge)
+
+
 def convert_sharded(features: DataFrame, output_path: str,
                     config: TilerConfig | None = None,
                     bounds: tuple[float, float, float, float] | None = None,
                     shard_dir: str | None = None,
-                    distributed_directory: bool = True,
-                    salted: bool = False,
-                    premerge: bool | str = "auto",
-                    _testing_only: bool = False) -> dict:
-    """Scale-out sink: executors write per-range shard files (compressed
-    blobs, in-shard dedup), the driver concatenates live byte ranges and
-    writes the directory — output byte-identical to ``convert``'s
-    single-writer archive.
+                    premerge: bool | str = "auto") -> dict:
+    """Scale-out sink: executors write per-partition shard files
+    (compressed blobs, in-shard dedup), then ``_finalize_sharded_distributed``
+    dedups blobs across shards, lays out the data section and writes the
+    directory — output byte-identical to ``convert``'s single-writer
+    archive.
 
-    This removes the two driver bottlenecks of the streaming sink named in
-    the round-1 review: per-blob gzip on the driver, and all tile bytes
-    crossing one NIC. With ``distributed_directory=True`` (default) the
-    THIRD obligation goes too: cross-shard blob dedup, final data offsets,
-    and directory varint encoding all run on executors
-    (_finalize_sharded_distributed) — driver state is O(shards+partitions)
-    and the winner-blob copy list streams via toLocalIterator, so 10^8+
-    tile archives never materialize an entry list on the driver.
-    ``distributed_directory=False`` keeps the original collect-everything
-    finalize (same bytes; useful as a differential oracle).
+    This removes the driver bottlenecks of the streaming sink: per-blob
+    gzip on the driver, and all tile bytes crossing one NIC. Past
+    ``driver_finalize_max_entries`` the finalize runs on executors too, so
+    10^8+ tile archives never materialize an entry list on the driver.
 
     Cross-shard duplicate blobs: a blob first seen in shard A and again in
     shard B is compressed and written into BOTH shard files (in-shard dedup
@@ -3030,30 +2822,12 @@ def convert_sharded(features: DataFrame, output_path: str,
     master without an explicit shard_dir raises rather than producing an
     archive that silently misses every remote executor's shards.
     """
-    import os
     import shutil
     import tempfile
 
     from .kernels import pmtiles as P
 
     config = (config or TilerConfig()).validate()
-    if not distributed_directory and not _testing_only:
-        # the collect-everything finalize materializes every entry row on
-        # the driver — kept ONLY as a differential oracle for the
-        # distributed assembly (VERDICT r3 item 6); unreachable from user
-        # code without the explicit test flag
-        raise ValueError(
-            "convert_sharded: distributed_directory=False is the legacy "
-            "collect-everything finalize, retained for differential "
-            "testing only. Use the default distributed finalize, or pass "
-            "_testing_only=True in a test."
-        )
-    if salted and premerge is True:
-        raise ValueError(
-            "convert_sharded: salted=True uses the WKB-shuffling two-phase "
-            "encode and cannot honor premerge=True (premerge makes salting "
-            "moot — drop salted, or leave premerge='auto')."
-        )
     master = features.sparkSession.conf.get("spark.master", "")
     if shard_dir is None and not master.startswith("local"):
         raise ValueError(
@@ -3061,203 +2835,32 @@ def convert_sharded(features: DataFrame, output_path: str,
             f"which executors cannot reach under master={master!r}. Pass "
             "shard_dir= on shared storage (visible to executors and driver)."
         )
-    if bounds is None:
-        # the bounds pass already scans every feature — piggyback the
-        # premerge-auto payload statistic on the same job instead of
-        # running _resolve_premerge's separate take(2048) (guide §1.2:
-        # remove whole passes). The global mean replaces the first-2048
-        # mean; the choice only pins WHICH plan runs (bytes are identical
-        # on either layout) and stays deterministic for a fixed input.
-        agg_cols = [F.min("lng_min"), F.min("lat_min"),
-                    F.max("lng_max"), F.max("lat_max")]
-        want_auto = premerge == "auto"
-        if want_auto:
-            agg_cols.append(F.avg(F.length("wkb")))
-        row = features.agg(*agg_cols).collect()[0]
-        if row[0] is None:
-            bounds = (-180.0, -85.0511287798066, 180.0, 85.0511287798066)
-        else:
-            bounds = (row[0], row[1], row[2], row[3])
-        if want_auto:
-            premerge = bool(row[4] is not None
-                            and row[4] >= PREMERGE_AUTO_WKB_BYTES)
-
-    from pyspark import StorageLevel
-
+    bounds, premerge = _resolve_inputs(features, config, bounds, premerge)
     codec = P.CODEC_BY_NAME[config.tile_compression]
     own_dir = shard_dir is None
     shard_dir = shard_dir or tempfile.mkdtemp(prefix="gpq_shards_")
-    if distributed_directory:
+    try:
         # NO persist and NO range exchange on the heavy data: a hash
         # shuffle on tile_id co-locates each tile (the encoder's only
         # requirement), so the fan-out executes exactly once as the
-        # shuffle map stage — repartitionByRange would add a sampling job
-        # that re-executes it (or forces caching the multi-10-GB fan-out
-        # output to disk just to sample it). Global tile order is restored
-        # later on the 40-byte entry rows only.
-        parts = config.shuffle_partitions
-        if config.write_properties:
-            if salted:
-                raise ValueError(
-                    "convert_sharded: write_properties=True cannot combine "
-                    "with salted=True"
-                )
-            if "props" not in features.columns:
-                raise ValueError(
-                    "convert_sharded: write_properties=True requires a "
-                    "'props' column — build it with encode_props_column"
-                )
-            if _resolve_premerge(features, premerge):
-                tiles = encode_tiles_premerge_props(features, config)
-            else:
-                records = fanout_records(features, config)
-                tiles = encode_tiles_with_props(
-                    records, features.select("feature_id", "props"), config,
-                    by_range=False)
-        elif not salted and _resolve_premerge(features, premerge):
-            # map-side message encode: the shuffle carries zigzag-varint
-            # feature messages (~5-8x smaller than WKB on vertex-dense
-            # input) and the reduce side only sorts + concatenates — this
-            # also makes hot-tile salting moot (the heavy per-record work
-            # is already spread across the map stage; the reduce task for
-            # a mega-tile is a bytes concat + gzip). 'auto' picks this
-            # layout only when the sampled mean WKB payload is large
-            # enough to beat the per-record message-object overhead
-            # (PREMERGE_AUTO_WKB_BYTES).
-            tiles = encode_tiles_premerge(features, config)
-        elif salted:
-            records = fanout_records(features, config)
-            hot = detect_hot_tiles(features, config)
-            tiles = encode_tiles_salted(records, config, hot_tile_ids=hot,
-                                        by_range=False)
-        else:
-            records = fanout_records(features, config)
-            tiles = encode_tiles(records, config, by_range=False)
+        # shuffle map stage. Global tile order is restored later on the
+        # 40-byte entry rows only.
+        tiles, _ = _tile_plan(features, config, premerge=premerge,
+                              props=config.write_properties, by_range=False)
         entries_df = tiles.withColumn(
             "pid", F.spark_partition_id()
-        ).mapInPandas(_make_shard_writer(shard_dir, codec,
-                                         _expected_codec_backend(features,
-                                                                 codec)),
-                      schema=SHARD_ENTRIES_SCHEMA)
-        result = _finalize_sharded_distributed(
+        ).mapInPandas(_make_shard_writer(
+            shard_dir, codec, _expected_codec_backend(features, codec)),
+            schema=SHARD_ENTRIES_SCHEMA)
+        return _finalize_sharded_distributed(
             entries_df, output_path, shard_dir, bounds, config, codec)
+    finally:
         if own_dir:
             shutil.rmtree(shard_dir, ignore_errors=True)
-        return result
-
-    # legacy collect-everything finalize (differential oracle): range
-    # partitioning + DISK_ONLY persist (the disk store streams the
-    # iterator; a memory-store block must fully unroll on-heap first)
-    if config.write_properties:
-        raise ValueError(
-            "convert_sharded: write_properties is not supported on the "
-            "legacy (distributed_directory=False) finalize"
-        )
-    records = fanout_records(features, config).persist(StorageLevel.DISK_ONLY)
-    if salted:
-        hot = detect_hot_tiles(features, config)
-        tiles = encode_tiles_salted(records, config, hot_tile_ids=hot)
-    else:
-        tiles = encode_tiles(records, config)
-    entries_df = tiles.withColumn("pid", F.spark_partition_id()).mapInPandas(
-        _make_shard_writer(shard_dir, codec,
-                           _expected_codec_backend(features, codec)),
-        schema=SHARD_ENTRIES_SCHEMA,
-    )
-    rows = entries_df.collect()
-    records.unpersist()
-    rows.sort(key=lambda r: r.tile_id)
-
-    # global first-occurrence dedup in tile_id order — EXACT assembler
-    # semantics (hash-keyed map with the raw-length collision guard), so the
-    # output bytes match the single-writer archive
-    final_by_hash: dict[int, tuple[int, int, int]] = {}
-    live_ranges: dict[int, list[tuple[int, int]]] = {}
-    entries: list[P.DirEntry] = []
-    data_len = 0
-    n_blobs = 0
-    total_features = 0
-    features_per_zoom: dict[int, int] = {}
-    zoom_seen: list[int] = []
-    for r in rows:
-        hit = final_by_hash.get(r.content_hash)
-        if hit is not None and hit[2] != r.raw_len:
-            hit = None
-        if hit is None:
-            hit = (data_len, r.blob_len, r.raw_len)
-            final_by_hash[r.content_hash] = hit
-            live_ranges.setdefault(r.pid, []).append((r.local_off, r.blob_len))
-            data_len += r.blob_len
-            n_blobs += 1
-        entries.append(P.DirEntry(r.tile_id, hit[0], hit[1], 1))
-        total_features += r.n_features
-        features_per_zoom[r.z] = features_per_zoom.get(r.z, 0) + r.n_features
-        zoom_seen.append(r.z)
-
-    coalesced = P.coalesce_run_lengths(entries)
-    root_raw, leaf_section, n_ent = P.build_directories(
-        coalesced, leaf_max_entries=config.leaf_max_entries)
-    root_dir = P.compress(root_raw, P.COMPRESSION_GZIP)
-    tilestats = {
-        "total_features": total_features,
-        "features_per_zoom": {str(k): v for k, v in sorted(features_per_zoom.items())},
-    }
-    meta = P.compress(
-        P.metadata_json(config.layer_name, config.min_zoom, config.max_zoom,
-                        config.layer_fields or {}, tilestats),
-        P.COMPRESSION_GZIP,
-    )
-    leaf_base = P.HEADER_SIZE + len(root_dir) + len(meta)
-    hdr = P.Header(
-        root_dir_offset=P.HEADER_SIZE,
-        root_dir_length=len(root_dir),
-        json_metadata_offset=P.HEADER_SIZE + len(root_dir),
-        json_metadata_length=len(meta),
-        leaf_dirs_offset=leaf_base if leaf_section else 0,
-        leaf_dirs_length=len(leaf_section),
-        tile_data_offset=leaf_base + len(leaf_section),
-        tile_data_length=data_len,
-        addressed_tiles_count=len(entries),
-        tile_entries_count=n_ent,
-        tile_contents_count=n_blobs,
-        clustered=True,
-        internal_compression=P.COMPRESSION_GZIP,
-        tile_compression=codec,
-        tile_type=P.TILETYPE_MVT,
-        min_zoom=min(zoom_seen) if zoom_seen else config.min_zoom,
-        max_zoom=max(zoom_seen) if zoom_seen else config.max_zoom,
-        min_lon=bounds[0] if entries else -180.0,
-        min_lat=bounds[1] if entries else -85.0,
-        max_lon=bounds[2] if entries else 180.0,
-        max_lat=bounds[3] if entries else 85.0,
-    )
-    with open(output_path, "wb") as out_f:
-        out_f.write(hdr.to_bytes())
-        out_f.write(root_dir)
-        out_f.write(meta)
-        if leaf_section:
-            out_f.write(leaf_section)
-        for pid in sorted(live_ranges):
-            shard_path = os.path.join(shard_dir, f"shard_{pid:05d}.bin")
-            with open(shard_path, "rb") as sf:
-                for off, ln in live_ranges[pid]:  # ascending per shard
-                    sf.seek(off)
-                    out_f.write(sf.read(ln))
-    if own_dir:
-        shutil.rmtree(shard_dir, ignore_errors=True)
-    return {
-        "tiles": len(entries),
-        "features": total_features,
-        "min_zoom": hdr.min_zoom,
-        "max_zoom": hdr.max_zoom,
-        "unique_blobs": n_blobs,
-        "bounds": bounds,
-    }
 
 
 def convert(features: DataFrame, output_path: str, config: TilerConfig | None = None,
              bounds: tuple[float, float, float, float] | None = None,
-             salted: bool = False,
              progress: Callable[[ProgressEvent], None] | None = None,
              progress_poll_sec: float = 1.0,
              premerge: bool | str = "auto") -> dict:
@@ -3276,6 +2879,8 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
     """
     import threading
 
+    from pyspark import StorageLevel
+
     from .kernels import pmtiles as P
 
     def emit(phase: str, kind: str, **info) -> None:
@@ -3283,90 +2888,21 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
             progress(ProgressEvent(phase, kind, info))
 
     config = (config or TilerConfig()).validate()
-    if salted and premerge is True:
-        raise ValueError(
-            "convert: salted=True uses the WKB-shuffling two-phase encode "
-            "and cannot honor premerge=True (premerge makes salting moot — "
-            "drop salted, or leave premerge='auto')."
-        )
     metrics = PipelineMetrics.create(features.sparkSession)
     emit("bounds", "start")
-    if bounds is None:
-        row = features.agg(
-            F.min("lng_min"), F.min("lat_min"), F.max("lng_max"), F.max("lat_max")
-        ).collect()[0]
-        if row[0] is None:  # empty input: valid world-bounds archive, no crash
-            bounds = (-180.0, -85.0511287798066, 180.0, 85.0511287798066)
-        else:
-            bounds = (row[0], row[1], row[2], row[3])
+    bounds, premerge = _resolve_inputs(features, config, bounds, premerge)
     emit("bounds", "complete", bounds=bounds)
 
-    from pyspark import StorageLevel
-
-    # Premerge + persist: the single-writer stream needs GLOBAL tile order
-    # (repartitionByRange), and range partitioning launches a SAMPLING job
-    # that would otherwise re-execute the whole fan-out. Persist therefore
-    # stays — but on the round-3 premerge layout it caches the small framed
-    # MESSAGES instead of the f64 WKB records (~5-8x less disk on
-    # vertex-dense input), and the expensive per-record geometry encode
-    # happens exactly once, map-side. This is the Spark analog of the
-    # reference writing phase-1 runs to disk before its phase-2 external
-    # sort (external_sort.rs:99-189).
-    if config.write_properties:
-        if salted:
-            raise ValueError(
-                "convert: write_properties=True uses the tag-interning "
-                "encoder and cannot combine with salted=True"
-            )
-        if "props" not in features.columns:
-            raise ValueError(
-                "convert: write_properties=True requires a 'props' column "
-                "(array<struct<key string, val binary>>) — build it with "
-                "encode_props_column(df, cols)"
-            )
-        if _resolve_premerge(features, premerge):
-            # premerge WITH tags (round 5): the shuffle carries framed
-            # geometry messages + props entries; the reduce side interns
-            # per-tile dictionaries vectorized — byte-identical to the
-            # WKB-layout props path below
-            records = features.mapInPandas(
-                make_fanout_encoded_props(config, metrics),
-                schema=MSG_PROPS_SCHEMA,
-            ).persist(StorageLevel.DISK_ONLY)
-            parts = config.shuffle_partitions
-            shuffled = (
-                records.repartitionByRange(parts, "tile_id")
-                if parts else records.repartitionByRange("tile_id")
-            ).sortWithinPartitions("tile_id", "feature_id")
-            tiles = shuffled.mapInPandas(
-                make_wrap_props_encoder(config, metrics), schema=TILES_SCHEMA)
-        else:
-            records = fanout_records(features, config, metrics).persist(
-                StorageLevel.DISK_ONLY)
-            tiles = encode_tiles_with_props(
-                records, features.select("feature_id", "props"), config,
-                metrics=metrics)
-    elif salted:
-        records = fanout_records(features, config, metrics).persist(
-            StorageLevel.DISK_ONLY)
-        hot = detect_hot_tiles(features, config)
-        tiles = encode_tiles_salted(records, config, hot_tile_ids=hot,
-                                    metrics=metrics)
-    elif _resolve_premerge(features, premerge):
-        records = features.mapInPandas(
-            make_fanout_encoded(config, metrics), schema=MSG_RECORDS_SCHEMA
-        ).persist(StorageLevel.DISK_ONLY)
-        parts = config.shuffle_partitions
-        shuffled = (
-            records.repartitionByRange(parts, "tile_id")
-            if parts else records.repartitionByRange("tile_id")
-        ).sortWithinPartitions("tile_id", "feature_id")
-        tiles = shuffled.mapInPandas(
-            make_wrap_encoder(config, metrics), schema=TILES_SCHEMA)
-    else:
-        records = fanout_records(features, config, metrics).persist(
-            StorageLevel.DISK_ONLY)
-        tiles = encode_tiles(records, config, metrics=metrics)
+    # The single-writer stream needs GLOBAL tile order, so the tile
+    # shuffle is a range partition, whose SAMPLING job would re-execute
+    # the whole fan-out: the map side is persisted to disk instead (on the
+    # premerge layout that is the small framed messages, not the f64 WKB).
+    # This is the Spark analog of the reference writing phase-1 runs to
+    # disk before its phase-2 external sort (external_sort.rs:99-189).
+    tiles, side = _tile_plan(features, config, premerge=premerge,
+                             props=config.write_properties, by_range=True,
+                             metrics=metrics)
+    side.persist(StorageLevel.DISK_ONLY)
 
     codec = P.CODEC_BY_NAME[config.tile_compression]
     asm = P.PMTilesAssembler(
@@ -3411,7 +2947,7 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
         if poller is not None:
             stop_poll.set()
             poller.join()
-        records.unpersist()
+        side.unpersist()
     if poller is not None:
         emit("fanout", "complete", **metrics.as_dict())
     emit("tiles", "complete", tiles=n_tiles, **metrics.as_dict())

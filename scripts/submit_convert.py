@@ -4,7 +4,8 @@
     spark-submit --py-files dist/gpq_tiles_spark.zip \
         scripts/submit_convert.py INPUT OUTPUT.pmtiles \
         [--min-zoom 0] [--max-zoom 14] [--layer-name features] \
-        [--compression gzip|none] [--salted] [--work-dir DIR (checkpointed)]
+        [--compression gzip|none|zstd|brotli] [--sharded] [--progress] \
+        [--work-dir DIR (checkpointed)]
 
 INPUT is a parquet path of interleaved documents (doc_id, spans) or — with
 --geoparquet — a GeoParquet file with a WKB geometry column.
@@ -27,7 +28,6 @@ def main() -> None:
                    help="zstd works via the zstandard package or a system "
                         "libzstd (ctypes); brotli requires the lib "
                         "installed (import-gated)")
-    p.add_argument("--salted", action="store_true")
     p.add_argument("--sharded", action="store_true",
                    help="executor-written shard files + driver concat "
                         "(byte-identical archive; parallel compression)")
@@ -106,8 +106,7 @@ def main() -> None:
             def progress(ev):  # noqa: ANN001 - ProgressEvent
                 print(f"[{ev.phase}] {ev.kind} {ev.info}")
 
-        stats = convert(feats, args.output, cfg, salted=args.salted,
-                        progress=progress)
+        stats = convert(feats, args.output, cfg, progress=progress)
     print(stats)
 
 

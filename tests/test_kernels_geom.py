@@ -178,6 +178,20 @@ def test_visvalingam():
     assert len(S.visvalingam(line, 0.01)) == 4
 
 
+def test_simplify_in_tile_coords():
+    # a wiggle smaller than 1px at this tile size disappears; larger survives
+    bounds = (0.0, 0.0, 10.0, 10.0)
+    px_deg = 10.0 / 4096  # one pixel in degrees
+    line = np.array(
+        [[1.0, 1.0], [2.0, 1.0 + 0.4 * px_deg], [3.0, 1.0],
+         [4.0, 1.0 + 50 * px_deg], [5.0, 1.0]]
+    )
+    out = S.simplify_in_tile_coords((G.LINESTRING, line), *bounds, 4096, 1.0)
+    assert len(out[1]) == 4  # tiny wiggle gone, big one kept
+    np.testing.assert_allclose(out[1][0], [1.0, 1.0], atol=1e-12)
+    np.testing.assert_allclose(out[1][-1], [5.0, 1.0], atol=1e-12)
+
+
 # ---------------------------------------------------------------- validate
 
 def test_validate_constants():

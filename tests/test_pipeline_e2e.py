@@ -270,6 +270,43 @@ def test_encode_single_tile_matches_pipeline(spark, docs_table, small_config):
     assert single == bytes(target.mvt)
 
 
+def test_encode_single_tile_interior_rect(spark):
+    """A tile inside a large polygon is emitted by the fan-out's grid
+    regime as the canonical buffered rect; encode_single_tile must produce
+    the same bytes (same ring, same starting vertex), not a clip of the
+    polygon that starts the ring from another vertex."""
+    import pandas as pd
+
+    from gpq_tiles_spark.pipeline import encode_single_tile
+
+    th = np.linspace(0, 2 * np.pi, 600, endpoint=False)
+    r = 14.0 + 0.5 * np.sin(9 * th)
+    ring = np.column_stack([20.0 + r * np.cos(th), 10.0 + r * np.sin(th)])
+    ring = np.vstack([ring, ring[:1]])
+    wkbs = [G.to_wkb((G.POLYGON, [ring])),
+            G.to_wkb((G.POLYGON, [ring[::-1] * 0.5]))]
+    pdf = pd.DataFrame({
+        "feature_id": [11, 12], "wkb": wkbs,
+        "geom_type": [G.POLYGON] * 2,
+        "lng_min": [float(G.bbox(G.from_wkb(w))[0]) for w in wkbs],
+        "lat_min": [float(G.bbox(G.from_wkb(w))[1]) for w in wkbs],
+        "lng_max": [float(G.bbox(G.from_wkb(w))[2]) for w in wkbs],
+        "lat_max": [float(G.bbox(G.from_wkb(w))[3]) for w in wkbs],
+    })
+    feats_df = spark.createDataFrame(pdf)
+    cfg = TilerConfig(min_zoom=6, max_zoom=7, shuffle_partitions=2)
+    recs = fanout_records(feats_df, cfg).collect()
+    interior = {r.tile_id for r in recs if len(r.wkb) == 0}
+    assert interior  # non-vacuous: the grid regime emitted interior rects
+    tiles = {t.tile_id: t for t in encode_tiles(
+        fanout_records(feats_df, cfg), cfg).collect()}
+    feats = list(zip(pdf["feature_id"].tolist(), wkbs))
+    bad = [tid for tid in sorted(tiles)
+           if encode_single_tile(feats, tiles[tid].z, tiles[tid].x,
+                                 tiles[tid].y, cfg) != bytes(tiles[tid].mvt)]
+    assert bad == []
+
+
 def test_convert_sharded_empty_input(spark, tmp_path):
     """Empty features -> valid, empty archive via the sharded sink too."""
     from gpq_tiles_spark.config import TilerConfig

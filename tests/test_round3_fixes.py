@@ -5,7 +5,6 @@ Each test pins one reviewed defect:
 * read_geoparquet(id_col=...) must salt flattened GeometryCollection parts
   so feature_id stays a unique identity key (part 0 byte-stable).
 * knn_join_distributed must not leak cached DataFrames across calls.
-* convert(salted=True) must report accumulator-backed tiles_out.
 * convert_sharded must leave no task-attempt temp files behind.
 """
 
@@ -84,22 +83,6 @@ def test_knn_distributed_releases_caches(spark):
     assert jsc.getPersistentRDDs().size() <= before + 1  # result cache only
     res.unpersist(blocking=True)
     assert jsc.getPersistentRDDs().size() <= before
-
-
-def test_convert_salted_reports_metrics(spark, docs_table, tmp_path):
-    """salted=True must thread PipelineMetrics into the encoders: the
-    returned metrics' tiles_out matches the tile count (previously 0)."""
-    from gpq_tiles_spark.config import TilerConfig
-    from gpq_tiles_spark.extract import extract_features
-    from gpq_tiles_spark.pipeline import convert
-
-    feats = extract_features(spark.read.parquet(docs_table))
-    cfg = TilerConfig(min_zoom=0, max_zoom=5, shuffle_partitions=4,
-                      hot_tile_threshold=10)
-    stats = convert(feats, str(tmp_path / "salted.pmtiles"), cfg, salted=True)
-    assert stats["tiles"] > 0
-    assert stats["metrics"]["tiles_out"] == stats["tiles"]
-    assert stats["metrics"]["features_in"] > 0
 
 
 def test_convert_sharded_commits_and_cleans_tmp(spark, docs_table, tmp_path):
@@ -348,38 +331,29 @@ def test_distributed_directory_assembly_parity(spark):
 
 
 def test_convert_sharded_salted_byte_identical(spark, docs_table, tmp_path):
-    """salted + hash-partitioned + distributed-directory sharded sink must
-    still produce the exact single-writer archive bytes."""
+    """The salted two-phase encode is gone (its knob is rejected); the
+    single-writer and sharded sinks still produce one archive, byte for
+    byte the z0-7 archive pinned while the salted layout agreed with it."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.extract import extract_features
     from gpq_tiles_spark.pipeline import convert, convert_sharded
 
+    from .test_pinned_archives import PINNED_ARCHIVES, file_sha256
+
     feats = extract_features(spark.read.parquet(docs_table))
-    cfg = TilerConfig(min_zoom=0, max_zoom=7, shuffle_partitions=4,
-                      hot_tile_threshold=50, salt_buckets=4)
+    kw, digest = PINNED_ARCHIVES["z0_7_sp4"]
+    cfg = TilerConfig(**kw)
+    with pytest.raises(TypeError):
+        convert_sharded(feats, str(tmp_path / "x.pmtiles"), cfg, salted=True)
+    with pytest.raises(TypeError):
+        convert(feats, str(tmp_path / "y.pmtiles"), cfg, salted=True)
     p1 = str(tmp_path / "single.pmtiles")
-    p2 = str(tmp_path / "sharded_salted.pmtiles")
+    p2 = str(tmp_path / "sharded.pmtiles")
     s1 = convert(feats, p1, cfg)
-    s2 = convert_sharded(feats, p2, cfg, salted=True)
+    s2 = convert_sharded(feats, p2, cfg)
     assert s1["tiles"] == s2["tiles"]
     assert s1["unique_blobs"] == s2["unique_blobs"]
-    with open(p1, "rb") as f1, open(p2, "rb") as f2:
-        assert f1.read() == f2.read()
-
-
-def test_salted_premerge_conflict_raises(spark, docs_table, tmp_path):
-    from gpq_tiles_spark.config import TilerConfig
-    from gpq_tiles_spark.extract import extract_features
-    from gpq_tiles_spark.pipeline import convert, convert_sharded
-
-    feats = extract_features(spark.read.parquet(docs_table))
-    cfg = TilerConfig(min_zoom=0, max_zoom=3, shuffle_partitions=4)
-    with pytest.raises(ValueError, match="premerge"):
-        convert_sharded(feats, str(tmp_path / "x.pmtiles"), cfg,
-                        salted=True, premerge=True)
-    with pytest.raises(ValueError, match="premerge"):
-        convert(feats, str(tmp_path / "y.pmtiles"), cfg,
-                salted=True, premerge=True)
+    assert file_sha256(p1) == file_sha256(p2) == digest
 
 
 def test_siphash_pad_bucketing_parity(monkeypatch):

@@ -61,44 +61,51 @@ def test_knn_join_probe_guard(spark, monkeypatch):
     assert out.groupBy("probe_id").count().count() == 3
 
 
-def test_legacy_sharded_finalize_gated(spark, docs_table, tmp_path):
-    """distributed_directory=False (collect-everything finalize) is a
-    differential oracle only: unreachable without _testing_only=True
-    (VERDICT r3 item 6), and still byte-identical with it."""
+def test_legacy_sharded_finalize_gated(spark, docs_table, tmp_path,
+                                      monkeypatch):
+    """The collect-everything finalize (VERDICT r3 item 6) is gone: its
+    knobs are rejected, and both entry-count paths of the remaining
+    finalize (driver-side and distributed) reproduce the z0-4 archive
+    pinned while the legacy finalize agreed with them."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.extract import extract_features
     from gpq_tiles_spark.pipeline import convert_sharded
 
+    from .test_pinned_archives import PINNED_ARCHIVES, file_sha256
+
     feats = extract_features(spark.read.parquet(docs_table))
     cfg = TilerConfig(min_zoom=0, max_zoom=4, shuffle_partitions=4)
-    with pytest.raises(ValueError, match="_testing_only"):
+    with pytest.raises(TypeError):
         convert_sharded(feats, str(tmp_path / "x.pmtiles"), cfg,
-                        distributed_directory=False)
-    p1 = str(tmp_path / "dist.pmtiles")
-    p2 = str(tmp_path / "legacy.pmtiles")
+                        distributed_directory=False, _testing_only=True)
+    p1 = str(tmp_path / "driver.pmtiles")
+    p2 = str(tmp_path / "dist.pmtiles")
     convert_sharded(feats, p1, cfg)
-    convert_sharded(feats, p2, cfg, distributed_directory=False,
-                    _testing_only=True)
-    assert open(p1, "rb").read() == open(p2, "rb").read()
+    monkeypatch.setenv("GPQ_DRIVER_FINALIZE_MAX_ENTRIES", "0")
+    convert_sharded(feats, p2, cfg)
+    assert file_sha256(p1) == file_sha256(p2) == PINNED_ARCHIVES["z0_4"][1]
 
 
 def test_max_tile_bytes_caps_mega_tile(spark, docs_table, tmp_path):
     """VERDICT r3 item 5: an oversized low-zoom tile is deterministically
     thinned to the byte budget, the cap is recorded in metrics, the archive
-    still decodes, and all four encode layouts (WKB, premerge, sharded,
-    salted phase-B) produce byte-identical capped archives."""
+    still decodes, and the WKB, premerge and sharded layouts produce
+    byte-identical capped archives, equal to the one pinned while the
+    salted phase-B layout agreed with them."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.extract import extract_features
     from gpq_tiles_spark.kernels.mvt import decode_tile
     from gpq_tiles_spark.kernels.pmtiles import PMTilesReader, read_tile
     from gpq_tiles_spark.pipeline import convert, convert_sharded
 
+    from .test_pinned_archives import PINNED_ARCHIVES, file_sha256
+
     feats = extract_features(spark.read.parquet(docs_table)).cache()
     budget = 2048
 
-    def cfg(**kw):
+    def cfg():
         return TilerConfig(min_zoom=0, max_zoom=4, shuffle_partitions=4,
-                           max_tile_bytes=budget, **kw)
+                           max_tile_bytes=budget)
 
     p_unc = str(tmp_path / "uncapped.pmtiles")
     stats_unc = convert(feats, p_unc,
@@ -111,19 +118,16 @@ def test_max_tile_bytes_caps_mega_tile(spark, docs_table, tmp_path):
     p_wkb = str(tmp_path / "wkb.pmtiles")
     p_pm = str(tmp_path / "pm.pmtiles")
     p_sh = str(tmp_path / "sh.pmtiles")
-    p_sa = str(tmp_path / "sa.pmtiles")
     stats = convert(feats, p_wkb, cfg(), premerge=False)
     convert(feats, p_pm, cfg(), premerge=True)
     convert_sharded(feats, p_sh, cfg())
-    convert(feats, p_sa, cfg(hot_tile_threshold=1, salt_buckets=4),
-            salted=True)
 
     assert stats["metrics"]["tiles_capped"] >= 1
     assert stats["metrics"]["records_capped"] >= 1
     b = open(p_wkb, "rb").read()
     assert b == open(p_pm, "rb").read()
     assert b == open(p_sh, "rb").read()
-    assert b == open(p_sa, "rb").read()
+    assert file_sha256(p_wkb) == PINNED_ARCHIVES["z0_4_cap2048"][1]
 
     raw = read_tile(p_wkb, 0, 0, 0)
     # layer head/tail overhead on top of the record-body budget is ~30 B

@@ -113,7 +113,7 @@ def test_props_requires_column_and_rejects_salted(spark, prop_features, tmp_path
     bare = prop_features.drop("props")
     with pytest.raises(ValueError, match="props"):
         convert(bare, str(tmp_path / "x.pmtiles"), cfg)
-    with pytest.raises(ValueError, match="salted"):
+    with pytest.raises(TypeError):  # the salted knob is gone
         convert(prop_features, str(tmp_path / "y.pmtiles"), cfg, salted=True)
 
 
