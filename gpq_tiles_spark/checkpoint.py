@@ -126,14 +126,14 @@ class CheckpointedRun:
 def convert_with_checkpoints(spark: SparkSession, docs_path: str, output_path: str,
                              work_dir: str, config=None) -> dict:
     """Checkpointed end-to-end conversion: extract -> records -> tiles ->
-    archive, resumable after any completed stage."""
+    archive, resumable after any completed stage. The archive stage is
+    the sink's own shard writer and finalize over the staged tiles."""
     from .config import TilerConfig
     from .extract import extract_features
-    from .pipeline import encode_tiles, fanout_records
+    from .pipeline import (PipelineMetrics, _archive_tiles, _resolve_inputs,
+                           encode_tiles, fanout_records)
 
-    from .pipeline import PipelineMetrics
-
-    config = config or TilerConfig()
+    config = (config or TilerConfig()).validate()
     run = CheckpointedRun(spark, work_dir, snapshot_fingerprint(spark, docs_path))
     metrics = PipelineMetrics.create(spark)
 
@@ -141,38 +141,19 @@ def convert_with_checkpoints(spark: SparkSession, docs_path: str, output_path: s
         "extract", lambda: extract_features(spark.read.parquet(docs_path))
     )
     records = run.run_stage("records", lambda: fanout_records(feats, config, metrics))
-    tiles = run.run_stage("tiles", lambda: encode_tiles(records, config, metrics=metrics))
+    tiles = run.run_stage("tiles", lambda: encode_tiles(
+        records, config, metrics=metrics, by_range=False))
     acc = metrics.as_dict()
     if any(acc.values()):  # only meaningful when the stages actually ran
         run.manifest["metrics"]["accumulators"] = acc
         run._save()
 
     if not run.stage_done("archive"):
-        from .kernels import pmtiles as P
-
-        codec = P.CODEC_BY_NAME[config.tile_compression]
-        asm = P.PMTilesAssembler(
-            tile_compression=codec, layer_name=config.layer_name,
-            min_zoom=config.min_zoom, max_zoom=config.max_zoom,
-            leaf_max_entries=config.leaf_max_entries,
-        )
-        # header bounds come from the extracted features (same as
-        # pipeline.convert); without this the sentinel [180,90,-180,-90]
-        # would be written, giving viewers an inverted/empty extent
-        brow = feats.agg(
-            F.min("lng_min"), F.min("lat_min"), F.max("lng_max"), F.max("lat_max")
-        ).collect()[0]
-        if brow[0] is not None:
-            asm.bounds = [brow[0], brow[1], brow[2], brow[3]]
-        else:
-            asm.bounds = [-180.0, -85.0511287798066, 180.0, 85.0511287798066]
+        # header bounds come from the extracted features, as in convert
+        bounds, _ = _resolve_inputs(feats, config, None, premerge=False)
         t0 = time.perf_counter()
-        n = 0
-        for row in tiles.orderBy("tile_id").toLocalIterator(prefetchPartitions=True):
-            asm.add_tile(row.tile_id, row.z, bytes(row.mvt), row.content_hash,
-                         row.n_features)
-            n += 1
-        asm.finalize(output_path)
-        run.mark("archive", tiles=n, seconds=round(time.perf_counter() - t0, 3),
+        stats = _archive_tiles(tiles, output_path, config, bounds)
+        run.mark("archive", tiles=stats["tiles"],
+                 seconds=round(time.perf_counter() - t0, 3),
                  output=output_path)
     return run.manifest

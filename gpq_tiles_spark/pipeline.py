@@ -8,17 +8,22 @@ Spark-first formulation of the reference's 3-phase engine
       |   buffered-bbox prefilter -> clip -> validate -> drop rules -> wkb
       |   (pre-simplify ONCE at max_zoom, pipeline.rs:860-863)
       v
-    records (tile_id, z, x, y, feature_id, wkb)
-      | repartitionByRange(tile_id).sortWithinPartitions(tile_id, feature_id)
+    records (tile_id, feature_id, wkb)
+      | repartition(tile_id).sortWithinPartitions(tile_id, feature_id)
       |   == reference phase 2 external merge sort (external_sort.rs:99-189);
       |   Spark's sort-based shuffle IS that operator, distributed
       v
     tiles (tile_id, z, x, y, n_features, mvt, content_hash)
-      | mapInPandas over consecutive tile_id runs (no second shuffle: range
-      |   partitioning guarantees each tile_id lives in exactly one partition)
+      | mapInPandas over consecutive tile_id runs (no second shuffle: the
+      |   hash partitioning puts each tile_id in exactly one partition)
       v
-    driver: toLocalIterator in tile_id order -> PMTilesAssembler (dedup,
-      run-length, directory, header) -> single .pmtiles
+    shard writer: executors compress + in-shard dedup each partition's
+      blobs into shard_{pid}.bin and emit 40-byte entry rows
+      v
+    finalize: cross-shard dedup (first occurrence in tile order), data
+      offsets, run-length directory, header -> single .pmtiles; on the
+      driver up to DRIVER_FINALIZE_MAX_ENTRIES entries, on the executors
+      past it
 
 Scale notes (10^12 docs):
 * exactly ONE wide shuffle (``_shuffle_on_tile``); everything else is
@@ -50,6 +55,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
 from typing import Callable
 
@@ -109,8 +115,8 @@ class ProgressEvent:
 class PipelineMetrics:
     """Accumulator-backed per-stage row counters, filled by the executors
     while the job runs (A6; the reference's MemoryTracker/progress analog,
-    memory.rs:78-195). Read on the driver any time — including DURING the
-    tile stream — for live rows-in/out."""
+    memory.rs:78-195). Read on the driver any time — including while the
+    tile job runs — for live rows-in/out."""
     features_in: object = None
     records_out: object = None
     tiles_out: object = None
@@ -1146,7 +1152,7 @@ def encode_tiles_premerge(features: DataFrame, config: TilerConfig,
     consumer needs globally tile-ordered partitions), reduce-side wrap."""
     return _tile_plan(features, config, premerge=True, props=False,
                       by_range=by_range, parts=num_partitions,
-                      metrics=metrics)[0]
+                      metrics=metrics)
 
 
 # premerge pays when records are coordinate-dense: the framed message is
@@ -1192,15 +1198,13 @@ def encode_tiles(records: DataFrame, config: TilerConfig,
                  by_range: bool = True) -> DataFrame:
     """records -> per-tile MVT rows, via ONE shuffle + in-partition sort.
 
-    ``by_range=True`` (default) range-partitions on tile_id: output
-    partitions are globally tile-ordered — required by the single-writer
-    sink's toLocalIterator stream. ``by_range=False`` hash-partitions
-    instead: the encoder only needs co-location + the in-partition sort,
-    and skipping the range exchange removes repartitionByRange's SAMPLING
-    JOB — which would otherwise execute the entire fan-out a second time
-    (or force persisting the multi-10-GB fan-out output just to avoid
-    that). The sharded sink uses this: its directory assembly re-orders
-    the tiny 40-byte entry rows in a separate range shuffle."""
+    ``by_range=True`` (default) range-partitions on tile_id, so output
+    partitions are globally tile-ordered. ``by_range=False``
+    hash-partitions instead: the encoder only needs co-location + the
+    in-partition sort, and skipping the range exchange removes
+    repartitionByRange's SAMPLING JOB — which would otherwise execute the
+    entire fan-out a second time. The sink uses this: its finalize
+    restores global tile order on the tiny 40-byte entry rows only."""
     return _shuffle_on_tile(
         records, num_partitions or config.shuffle_partitions, by_range
     ).mapInPandas(make_encoder(config, metrics), schema=TILES_SCHEMA)
@@ -1970,7 +1974,7 @@ def encode_tiles_premerge_props(features: DataFrame, config: TilerConfig,
     WKB-shuffling layout)."""
     return _tile_plan(features, config, premerge=True, props=True,
                       by_range=by_range, parts=num_partitions,
-                      metrics=metrics)[0]
+                      metrics=metrics)
 
 
 def _shuffle_on_tile(df: DataFrame, parts: int | None,
@@ -1990,31 +1994,25 @@ def _shuffle_on_tile(df: DataFrame, parts: int | None,
 
 def _tile_plan(features: DataFrame, config: TilerConfig, premerge: bool,
                props: bool, by_range: bool, parts: int | None = None,
-               metrics: PipelineMetrics | None = None
-               ) -> tuple[DataFrame, DataFrame]:
-    """features -> (tiles, map side): the one dispatch over the four
-    (props, premerge) encode layouts, which all produce the same tile
-    bytes. The map side is the frame the tile shuffle reads (fan-out WKB
-    records, or framed messages on the premerge layout); a sink that
-    range-partitions persists it, since repartitionByRange's sampling job
-    would otherwise run the fan-out a second time."""
+               metrics: PipelineMetrics | None = None) -> DataFrame:
+    """features -> tiles: the one dispatch over the four (props, premerge)
+    encode layouts, which all produce the same tile bytes."""
     if not premerge:
-        side = fanout_records(features, config, metrics)
+        records = fanout_records(features, config, metrics)
         if props:
             return encode_tiles_with_props(
-                side, features.select("feature_id", "props"), config, parts,
-                metrics, by_range), side
-        return encode_tiles(side, config, parts, metrics, by_range), side
+                records, features.select("feature_id", "props"), config,
+                parts, metrics, by_range)
+        return encode_tiles(records, config, parts, metrics, by_range)
     make_map, schema, make_reduce = (
         (make_fanout_encoded_props, MSG_PROPS_SCHEMA, make_wrap_props_encoder)
         if props else
         (make_fanout_encoded, MSG_RECORDS_SCHEMA, make_wrap_encoder))
-    side = spread_small_input(features).mapInPandas(
+    msgs = spread_small_input(features).mapInPandas(
         make_map(config, metrics), schema=schema)
-    tiles = _shuffle_on_tile(
-        side, parts or config.shuffle_partitions, by_range
+    return _shuffle_on_tile(
+        msgs, parts or config.shuffle_partitions, by_range
     ).mapInPandas(make_reduce(config, metrics), schema=TILES_SCHEMA)
-    return tiles, side
 
 
 def encode_single_tile(features: list[tuple[int, bytes]], z: int, x: int, y: int,
@@ -2087,6 +2085,11 @@ SHARD_ENTRIES_SCHEMA = StructType(
         StructField("pid", IntegerType(), False),
     ]
 )
+
+# the blob-streaming transport's entry rows: the compressed blob rides on
+# each first-in-shard row (null on an in-shard duplicate)
+SHARD_BLOB_ENTRIES_SCHEMA = StructType(
+    SHARD_ENTRIES_SCHEMA.fields + [StructField("blob", BinaryType(), True)])
 
 # one row per range partition: the partition's run-coalesced entries as
 # raw int64-LE arrays, plus boundary scalars so the driver can compute the
@@ -2287,21 +2290,29 @@ def _expected_codec_backend(features: DataFrame, codec: int) -> str | None:
     return None if (got is None or got.endswith(":unavailable")) else got
 
 
-def _make_shard_writer(shard_dir: str, codec: int,
+def _make_shard_writer(shard_dir: str | None, codec: int,
                        expected_backend: str | None = None):
     """Per-partition shard writer: compresses tile blobs ON THE EXECUTORS
-    (the single-writer convert() compresses every blob on the driver) and
-    appends them to shard_{pid}.bin with in-shard dedup; emits 40-byte
-    entry rows instead of tile bytes. This is the scale-out form of the
-    sink: at 10^8+ tiles all blob bytes no longer cross the driver NIC.
+    with in-shard dedup and emits 40-byte entry rows instead of tile
+    bytes; ``local_off`` is a blob's offset in its partition's shard.
+
+    With a ``shard_dir`` the blobs are appended to shard_{pid}.bin there,
+    so at 10^8+ tiles no blob byte crosses the driver NIC. With
+    ``shard_dir=None`` (the blob-streaming transport, for executors that
+    share no storage with the driver) no file is written: each
+    first-in-shard blob rides in its entry row's ``blob`` column
+    (SHARD_BLOB_ENTRIES_SCHEMA), and ``_drain_blobs`` rebuilds the shard
+    files on the driver.
 
     Retry/speculation safety: each task attempt writes to an
     attempt-unique temp name and atomically renames to the final
     shard_{pid}.bin when its iterator completes. Partition contents are
-    deterministic (range shuffle + in-partition sort upstream), so any
+    deterministic (tile shuffle + in-partition sort upstream), so any
     attempt produces byte-identical bytes and last-rename-wins is safe;
     a failed attempt's temp file is simply never renamed."""
     import os
+
+    cols = SHARD_ENTRIES_SCHEMA.names + ([] if shard_dir else ["blob"])
 
     def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -2329,35 +2340,33 @@ def _make_shard_writer(shard_dir: str, codec: int,
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                if f is None:
+                if pid is None:
                     pid = int(pdf["pid"].iloc[0])
-                    tc = TaskContext.get()
-                    attempt = tc.taskAttemptId() if tc is not None else 0
-                    final_path = os.path.join(shard_dir, f"shard_{pid:05d}.bin")
-                    tmp_path = f"{final_path}.attempt{attempt}.tmp"
-                    f = open(tmp_path, "wb")
-                out = {k: [] for k in (
-                    "tile_id", "z", "content_hash", "raw_len", "local_off",
-                    "blob_len", "n_features", "pid")}
-                for row in pdf.itertuples(index=False):
-                    raw = bytes(row.mvt)
-                    key = (int(row.content_hash), len(raw))
+                    if shard_dir is not None:
+                        tc = TaskContext.get()
+                        attempt = tc.taskAttemptId() if tc is not None else 0
+                        final_path = os.path.join(shard_dir,
+                                                  f"shard_{pid:05d}.bin")
+                        tmp_path = f"{final_path}.attempt{attempt}.tmp"
+                        f = open(tmp_path, "wb")
+                raw_len, offs, lens, blobs = [], [], [], []
+                for h, mvt in zip(pdf["content_hash"].tolist(),
+                                  pdf["mvt"].tolist()):
+                    key = (h, len(mvt))
                     hit = by_hash.get(key)
+                    blob = None
                     if hit is None:
-                        blob = compress(raw, codec)
-                        hit = (local_off, len(blob))
-                        by_hash[key] = hit
-                        f.write(blob)
+                        blob = compress(bytes(mvt), codec)
+                        hit = by_hash[key] = (local_off, len(blob))
                         local_off += len(blob)
-                    out["tile_id"].append(int(row.tile_id))
-                    out["z"].append(int(row.z))
-                    out["content_hash"].append(int(row.content_hash))
-                    out["raw_len"].append(len(raw))
-                    out["local_off"].append(hit[0])
-                    out["blob_len"].append(hit[1])
-                    out["n_features"].append(int(row.n_features))
-                    out["pid"].append(pid)
-                yield pd.DataFrame(out)
+                        if f is not None:
+                            f.write(blob)
+                    raw_len.append(key[1])
+                    offs.append(hit[0])
+                    lens.append(hit[1])
+                    blobs.append(None if f is not None else blob)
+                yield pdf.assign(raw_len=raw_len, local_off=offs,
+                                 blob_len=lens, pid=pid, blob=blobs)[cols]
             committed = True
         finally:
             if f is not None:
@@ -2373,46 +2382,197 @@ def _make_shard_writer(shard_dir: str, codec: int,
     return write
 
 
-def driver_finalize_max_entries() -> int:
-    """Addressed-entry count below which the sharded sink assembles the
-    archive driver-side (one Arrow collect + numpy) instead of running the
-    distributed directory/winner choreography. 40-byte entry rows: the
-    2M default is ~130 MB of driver arrays — far under any sane driver
-    heap — while 10^8-tile archives still take the distributed path.
-    Env knob GPQ_DRIVER_FINALIZE_MAX_ENTRIES overrides (0 disables)."""
+def _stream_blobs(spark, shard_dir: str | None) -> bool:
+    """The transport predicate: executors write shard files themselves
+    when the driver can read them back — a caller-given ``shard_dir`` on
+    shared storage, or the driver-local default under a local master.
+    Otherwise (a cluster master and no ``shard_dir``) the blobs stream to
+    the driver in the entry rows."""
+    master = spark.conf.get("spark.master", "")
+    return shard_dir is None and not master.startswith("local")
+
+
+def _drain_blobs(entries: DataFrame, shard_dir: str) -> None:
+    """The blob-streaming transport's driver side: write every shipped
+    first-in-shard blob into a driver-local shard_{pid}.bin under
+    ``shard_dir``, so the finalize reads the same files an executor would
+    have written. toLocalIterator yields partitions in index order, one
+    pid each, so the shards arrive in pid order; each blob's
+    ``local_off`` must equal its file position, since a lost or reordered
+    row would misplace every later blob of its shard — fail loudly."""
     import os
 
-    return int(os.environ.get("GPQ_DRIVER_FINALIZE_MAX_ENTRIES", "2000000"))
+    f = None
+    pid = -1
+    try:
+        for r in (entries.where(F.col("blob").isNotNull())
+                  .select("pid", "local_off", "blob")
+                  .toLocalIterator(prefetchPartitions=True)):
+            if r["pid"] != pid:
+                if r["pid"] < pid:
+                    raise RuntimeError(
+                        f"shard {r['pid']} streamed after shard {pid}")
+                if f is not None:
+                    f.close()
+                pid = r["pid"]
+                f = open(os.path.join(shard_dir, f"shard_{pid:05d}.bin"),
+                         "wb")
+            if r["local_off"] != f.tell():
+                raise RuntimeError(
+                    f"shard {pid}: blob for local_off {r['local_off']} "
+                    f"arrived at file position {f.tell()}")
+            f.write(r["blob"])
+    finally:
+        if f is not None:
+            f.close()
 
 
-def _finalize_entries_driver(pdf: pd.DataFrame, output_path: str,
-                             shard_dir: str, bounds: tuple,
-                             config: TilerConfig, codec: int,
-                             total_features: int, zmin: int,
-                             zmax: int) -> dict:
-    """Driver-side sharded-archive finalize over one collected entry frame
-    — byte-identical to ``_finalize_sharded_distributed`` (same winner
-    rule: min-tile_id first occurrence per (content_hash, raw_len); same
-    data order: winners concatenated in winner-tile order; same directory
-    bytes: one DirectoryBuilder.add over the run-coalesced arrays, which
-    equals the chunked adds by test). All set-up work is vectorized numpy;
-    no per-entry Python objects beyond the final blob-copy loop."""
-    import os as _os
+class _Progress:
+    """The sink's ProgressEvents: ``emit`` calls the caller's callback (a
+    no-op without one), and ``polling`` brackets the job that runs the
+    tile plan with a driver thread that emits 'fanout' and 'tiles'
+    progress from the live accumulators every ``poll_sec`` while they move
+    (Phase1Progress analog, pipeline.rs:41-77)."""
+
+    def __init__(self, callback: Callable[[ProgressEvent], None] | None = None,
+                 metrics: PipelineMetrics | None = None,
+                 poll_sec: float = 1.0):
+        self.callback, self.metrics, self.poll_sec = callback, metrics, poll_sec
+
+    def emit(self, phase: str, kind: str, **info) -> None:
+        if self.callback is not None:
+            self.callback(ProgressEvent(phase, kind, info))
+
+    def counters(self) -> dict[str, int]:
+        return self.metrics.as_dict() if self.metrics is not None else {}
+
+    @contextmanager
+    def polling(self):
+        import threading
+
+        self.emit("fanout", "start")
+        self.emit("tiles", "start")
+        stop = threading.Event()
+
+        def poll() -> None:
+            last: dict[str, int] = {}
+            while not stop.wait(self.poll_sec):
+                cur = self.counters()
+                if cur["features_in"] != last.get("features_in"):
+                    self.emit("fanout", "progress", **cur)
+                if cur["tiles_out"] != last.get("tiles_out"):
+                    self.emit("tiles", "progress", tiles=cur["tiles_out"],
+                              **cur)
+                last = cur
+
+        poller = threading.Thread(target=poll, daemon=True)
+        if self.callback is not None and self.metrics is not None:
+            poller.start()
+        try:
+            yield
+        finally:
+            # a failed job must not leave the poller polling a dead
+            # accumulator (ADVICE r3)
+            stop.set()
+            if poller.is_alive():
+                poller.join()
+        self.emit("fanout", "complete", **self.counters())
+
+
+# Addressed-entry count up to which the finalize lays the archive out on
+# the driver (one Arrow collect + numpy) instead of running the
+# distributed winner / prefix-sum / directory-stream choreography and its
+# ~8 extra Spark jobs. 40-byte entry rows: 2M is ~130 MB of driver arrays,
+# while 10^8-tile archives take the distributed path.
+DRIVER_FINALIZE_MAX_ENTRIES = 2_000_000
+
+
+@dataclass
+class _DataPlan:
+    """A finalize's layout decisions: the directory (root bytes
+    uncompressed, coalesced entry count, bytes spilled as leaves), the
+    data section's blob count and length, the per-zoom feature counts,
+    and the winner blobs as (pid, local_off, blob_len) in data order."""
+    root_raw: bytes
+    n_coalesced: int
+    leaf_len: int
+    n_blobs: int
+    data_len: int
+    features_per_zoom: dict
+    blobs: object
+
+
+def _finalize_shards(entries_df: DataFrame, output_path: str, shard_dir: str,
+                     bounds: tuple, config: TilerConfig, codec: int,
+                     progress: _Progress | None = None) -> dict:
+    """Shard entry rows + shard files -> the archive at ``output_path``.
+
+    A blob duplicated across shards keeps its first occurrence in tile
+    order (the min-tile_id entry per (content_hash, raw_len)), data bytes
+    concatenate in that winner order, and the directory is the
+    run-coalesced global entry list. ``_plan_data_driver`` (up to
+    DRIVER_FINALIZE_MAX_ENTRIES entries) and ``_plan_data_distributed``
+    compute that same layout; ``_write_archive`` writes it. Entry rows
+    with a ``blob`` column (the blob-streaming transport) are first
+    drained into shard files under ``shard_dir``."""
     import tempfile
+    from contextlib import ExitStack
 
+    from pyspark import StorageLevel
+
+    progress = progress or _Progress()
+    cached = entries_df.persist(StorageLevel.DISK_ONLY)
+    with ExitStack() as stack:
+        stack.callback(cached.unpersist)
+        entries = cached
+        with progress.polling():  # the tile plan runs as the entries land
+            if "blob" in cached.columns:
+                _drain_blobs(cached, shard_dir)
+                entries = cached.drop("blob")
+            n_addressed = entries.count()
+        progress.emit("tiles", "complete", tiles=n_addressed,
+                      **progress.counters())
+        progress.emit("archive", "start")
+        leaf_spill = stack.enter_context(tempfile.TemporaryFile())
+        plan_data = (_plan_data_driver
+                     if n_addressed <= DRIVER_FINALIZE_MAX_ENTRIES
+                     else _plan_data_distributed)
+        plan = plan_data(entries, config, leaf_spill, stack)
+        hdr = _write_archive(output_path, config, codec, bounds, n_addressed,
+                             plan, leaf_spill, shard_dir)
+    progress.emit("archive", "complete", path=output_path,
+                  unique_blobs=plan.n_blobs)
+    return {
+        "tiles": n_addressed,
+        "features": sum(plan.features_per_zoom.values()),
+        "min_zoom": hdr.min_zoom,
+        "max_zoom": hdr.max_zoom,
+        "unique_blobs": plan.n_blobs,
+        "bounds": bounds,
+    }
+
+
+def _plan_data_driver(entries: DataFrame, config: TilerConfig, leaf_spill,
+                      stack) -> _DataPlan:
+    """The driver finalize: one Arrow collect of the entry rows, then the
+    winner rule, data offsets and directory as vectorized numpy; the
+    directory is one DirectoryBuilder.add over the run-coalesced arrays,
+    which equals the distributed chunked adds by test."""
     from .kernels import pmtiles as P
     from .kernels.pmtiles import coalesce_runs_arrays
 
-    order = np.argsort(pdf["tile_id"].to_numpy(), kind="stable")
-    tid = pdf["tile_id"].to_numpy()[order]
-    zs = pdf["z"].to_numpy()[order]
-    nfeat = pdf["n_features"].to_numpy()[order]
+    pdf = entries.toPandas()
+    order = np.argsort(pdf["tile_id"].to_numpy(dtype=np.int64), kind="stable")
+
+    def col(name: str) -> np.ndarray:
+        return pdf[name].to_numpy(dtype=np.int64)[order]
+
+    tid = col("tile_id")
     key = np.empty(len(tid), dtype=[("h", "<i8"), ("l", "<i8")])
-    key["h"] = pdf["content_hash"].to_numpy()[order]
-    key["l"] = pdf["raw_len"].to_numpy()[order]
+    key["h"] = col("content_hash")
+    key["l"] = col("raw_len")
     # unique (hash, raw_len) pairs: first_idx = first occurrence in tile
-    # order (== the distributed groupBy's min-tile_id winner); inverse maps
-    # each entry to its pair
+    # order (the winner); inverse maps each entry to its pair
     _, first_idx, inverse = np.unique(key, return_index=True,
                                       return_inverse=True)
     n_blobs = len(first_idx)
@@ -2421,342 +2581,187 @@ def _finalize_entries_driver(pdf: pd.DataFrame, output_path: str,
     win_rank = np.empty(n_blobs, dtype=np.int64)
     win_rank[perm] = np.arange(n_blobs)
     win_idx = first_idx[perm]
-    win_blen = pdf["blob_len"].to_numpy()[order][win_idx]
-    win_loff = pdf["local_off"].to_numpy()[order][win_idx]
-    win_pid = pdf["pid"].to_numpy()[order][win_idx]
-    win_off = np.concatenate(([0], np.cumsum(win_blen[:-1])))
-    data_len = int(win_blen.sum())
-
+    win_blen = col("blob_len")[win_idx]
+    win_off = np.concatenate(([0], np.cumsum(win_blen)[:-1]))
     rank = win_rank[inverse]
-    ent_off = win_off[rank]
-    ent_len = win_blen[rank]
-    ct, co, cl, cr = coalesce_runs_arrays(tid, ent_off, ent_len)
-
-    leaf_tmp = tempfile.TemporaryFile()
-    try:
-        builder = P.DirectoryBuilder(len(ct), P.COMPRESSION_GZIP,
-                                     spill=leaf_tmp,
-                                     leaf_max_entries=config.leaf_max_entries)
-        builder.add(ct, co, cl, cr)
-        root_dir_bytes, _, n_coalesced = builder.finish()
-        leaf_len = builder.leaf_length
-
-        zcounts = np.zeros(int(zs.max()) + 1, dtype=np.int64)
-        np.add.at(zcounts, zs, nfeat)
-        features_per_zoom = {
-            int(z): int(zcounts[z]) for z in np.flatnonzero(zcounts)
-        }
-        root_dir = P.compress(root_dir_bytes, P.COMPRESSION_GZIP)
-        tilestats = {
-            "total_features": total_features,
-            "features_per_zoom": {str(k): v for k, v in
-                                  sorted(features_per_zoom.items())},
-        }
-        meta = P.compress(
-            P.metadata_json(config.layer_name, config.min_zoom,
-                            config.max_zoom, config.layer_fields or {},
-                            tilestats),
-            P.COMPRESSION_GZIP,
-        )
-        leaf_base = P.HEADER_SIZE + len(root_dir) + len(meta)
-        hdr = P.Header(
-            root_dir_offset=P.HEADER_SIZE,
-            root_dir_length=len(root_dir),
-            json_metadata_offset=P.HEADER_SIZE + len(root_dir),
-            json_metadata_length=len(meta),
-            leaf_dirs_offset=leaf_base if leaf_len else 0,
-            leaf_dirs_length=leaf_len,
-            tile_data_offset=leaf_base + leaf_len,
-            tile_data_length=data_len,
-            addressed_tiles_count=len(tid),
-            tile_entries_count=n_coalesced,
-            tile_contents_count=n_blobs,
-            clustered=True,
-            internal_compression=P.COMPRESSION_GZIP,
-            tile_compression=codec,
-            tile_type=P.TILETYPE_MVT,
-            min_zoom=zmin,
-            max_zoom=zmax,
-            min_lon=bounds[0],
-            min_lat=bounds[1],
-            max_lon=bounds[2],
-            max_lat=bounds[3],
-        )
-        with open(output_path, "wb") as out_f:
-            out_f.write(hdr.to_bytes())
-            out_f.write(root_dir)
-            out_f.write(meta)
-            if leaf_len:
-                import shutil
-
-                leaf_tmp.seek(0)
-                shutil.copyfileobj(leaf_tmp, out_f, length=1 << 20)
-            from collections import OrderedDict
-
-            handles: OrderedDict[int, object] = OrderedDict()
-            try:
-                for i in range(n_blobs):
-                    p = int(win_pid[i])
-                    sf = handles.get(p)
-                    if sf is None:
-                        if len(handles) >= 64:
-                            _, old = handles.popitem(last=False)
-                            old.close()
-                        sf = handles[p] = open(_os.path.join(
-                            shard_dir, f"shard_{p:05d}.bin"), "rb")
-                    else:
-                        handles.move_to_end(p)
-                    sf.seek(int(win_loff[i]))
-                    out_f.write(sf.read(int(win_blen[i])))
-            finally:
-                for sf in handles.values():
-                    sf.close()
-    finally:
-        leaf_tmp.close()
-    return {
-        "tiles": len(tid),
-        "features": total_features,
-        "min_zoom": zmin,
-        "max_zoom": zmax,
-        "unique_blobs": n_blobs,
-        "bounds": bounds,
-    }
+    ct, co, cl, cr = coalesce_runs_arrays(tid, win_off[rank], win_blen[rank])
+    builder = P.DirectoryBuilder(len(ct), P.COMPRESSION_GZIP,
+                                 spill=leaf_spill,
+                                 leaf_max_entries=config.leaf_max_entries)
+    builder.add(ct, co, cl, cr)
+    root_raw, _, n_coalesced = builder.finish()
+    zs = col("z")
+    zcounts = np.zeros(int(zs.max(initial=-1)) + 1, dtype=np.int64)
+    np.add.at(zcounts, zs, col("n_features"))
+    return _DataPlan(
+        root_raw, n_coalesced, builder.leaf_length, n_blobs,
+        int(win_blen.sum()),
+        {int(z): int(zcounts[z]) for z in np.flatnonzero(zcounts)},
+        zip(col("pid")[win_idx].tolist(), col("local_off")[win_idx].tolist(),
+            win_blen.tolist()))
 
 
-def _finalize_sharded_distributed(entries_df: DataFrame,
-                                  output_path: str, shard_dir: str,
-                                  bounds: tuple, config: TilerConfig,
-                                  codec: int) -> dict:
-    """Distributed archive finalize: cross-shard blob dedup, final data
-    offsets, and directory run-coalescing all run ON EXECUTORS; the driver
-    streams one partition's coalesced entry arrays at a time into a
-    DirectoryBuilder, so its directory state is O(one partition + one
-    leaf + #leaves): past ROOT_MAX_ENTRIES the builder spills compressed
-    leaf directories to a temp file as they fill and the root keeps one
-    pointer per leaf (run_length==0, spec two-level layout). The driver
-    never materializes the entry list OR the full directory bytes — the
-    round-4 review's remaining O(tiles) driver obligation. Winner blobs
-    stream via toLocalIterator for the sequential file concat.
-
-    Byte-identical to the single-writer archive: the winner of a duplicated
-    blob is its first occurrence in tile order ((pid, local_off) order —
-    pids ascend with the range partitioning), data bytes concatenate in
-    that order, and the directory bytes equal encode_directory over the
-    global coalesced entry list (tested)."""
-    import os
-    import tempfile
-
+def _plan_data_distributed(entries: DataFrame, config: TilerConfig,
+                           leaf_spill, stack) -> _DataPlan:
+    """The distributed finalize: the winner choice, the data offsets'
+    prefix sum and directory run-coalescing all run ON EXECUTORS; the
+    driver streams one partition's coalesced entry arrays at a time into a
+    DirectoryBuilder (``_assemble_directory_stream``), so its state is
+    O(one partition + one leaf + #leaves), never O(tiles). The winner
+    blobs stream via toLocalIterator for the copy."""
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
+    features_per_zoom = {
+        int(r[0]): int(r[1])
+        for r in entries.groupBy("z").agg(F.sum("n_features")).collect()
+    }
+    # winner blob per (content_hash, raw_len): first occurrence in GLOBAL
+    # TILE ORDER = the entry with the minimum tile_id (tile_ids are unique
+    # per entry, so no tie-break is needed). The tile shuffle is hash
+    # partitioned, so (pid, local_off) carries no global order — tile_id
+    # does.
+    winners = (
+        entries.groupBy("content_hash", "raw_len")
+        .agg(
+            F.min("tile_id").alias("win_tile"),
+            F.min_by(F.struct("pid", "local_off", "blob_len"),
+                     F.col("tile_id")).alias("w"),
+        )
+        .select("content_hash", "raw_len", "win_tile",
+                F.col("w.pid").alias("pid"),
+                F.col("w.local_off").alias("local_off"),
+                F.col("w.blob_len").alias("blob_len"))
+        .repartitionByRange(max(config.shuffle_partitions or 8, 8),
+                            "win_tile")
+        .sortWithinPartitions("win_tile")
+        .withColumn("wpid", F.spark_partition_id())
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    stack.callback(winners.unpersist)
+    # two-phase prefix sum over win_tile order: per-range-partition totals
+    # to the driver (O(partitions)), cumulative bases back in
+    per_part = winners.groupBy("wpid").agg(
+        F.sum("blob_len"), F.count("*")).orderBy("wpid").collect()
+    bases = np.concatenate(([0], np.cumsum([int(r[1]) for r in per_part])))
+    base_df = entries.sparkSession.createDataFrame(
+        [(int(r[0]), int(b)) for r, b in zip(per_part, bases)],
+        "wpid int, base long")
+    wpref = (
+        Window.partitionBy("wpid").orderBy("win_tile")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    woffs = (
+        winners
+        .withColumn("prefix",
+                    F.coalesce(F.sum("blob_len").over(wpref), F.lit(0)))
+        .join(F.broadcast(base_df), "wpid")
+        .select(
+            "content_hash", "raw_len",
+            (F.col("base") + F.col("prefix")).alias("off"),
+            F.col("blob_len").alias("len"),
+        )
+    )
+    # final directory entries: one range shuffle of 24-byte rows, then
+    # per-partition coalesce + varint encode on the executors
+    ent = (entries.select("tile_id", "content_hash", "raw_len")
+           .join(woffs, ["content_hash", "raw_len"])
+           .select("tile_id", "off", "len"))
+    parts = config.shuffle_partitions
+    ent = (
+        ent.repartitionByRange(parts, "tile_id")
+        if parts else ent.repartitionByRange("tile_id")
+    ).sortWithinPartitions("tile_id")
+    root_raw, n_coalesced, leaf_len = _assemble_directory_stream(
+        ent, leaf_spill, config.leaf_max_entries)
+    # winners in win_tile order (== data order) with NO orderBy: `winners`
+    # is persisted range-partitioned and sorted by win_tile, and
+    # toLocalIterator yields partitions in index order — an orderBy would
+    # re-run a full sort exchange once PER PARTITION JOB it launches
+    blobs = winners.select("pid", "local_off", "blob_len").toLocalIterator(
+        prefetchPartitions=True)
+    return _DataPlan(root_raw, n_coalesced, leaf_len,
+                     sum(int(r[2]) for r in per_part), int(bases[-1]),
+                     features_per_zoom, blobs)
+
+
+def _write_archive(output_path: str, config: TilerConfig, codec: int,
+                   bounds: tuple, n_addressed: int, plan: _DataPlan,
+                   leaf_spill, shard_dir: str):
+    """The one archive tail: header, gzipped root directory and metadata,
+    the spilled leaf directories, then each winner blob copied from its
+    shard file in data order. An empty archive gets whole-world bounds and
+    the configured zoom range."""
+    import os
+    import shutil
+    from collections import OrderedDict
+
     from .kernels import pmtiles as P
 
-    spark = entries_df.sparkSession
-    entries = entries_df.persist(StorageLevel.DISK_ONLY)
-    agg = entries.agg(
-        F.count("*").alias("n"), F.min("z"), F.max("z"), F.sum("n_features")
-    ).collect()[0]
-    n_addressed = int(agg[0] or 0)
-    total_features = int(agg[3] or 0)
-    zmin = int(agg[1]) if agg[1] is not None else config.min_zoom
-    zmax = int(agg[2]) if agg[2] is not None else config.max_zoom
-
-    if 0 < n_addressed <= driver_finalize_max_entries():
-        # small archive: the distributed assembly's value is bounded driver
-        # memory at 10^8+ tiles, but it costs ~8 extra Spark jobs (winner
-        # groupBy, prefix-sum collect, directory range shuffle + sampling,
-        # chunk persist + stats + toLocalIterator streams). Below the entry
-        # threshold (40-byte rows; the default 2M ≈ 130 MB of driver
-        # arrays) ONE Arrow collect plus vectorized numpy assembly produces
-        # byte-identical output with none of that choreography (guide
-        # §1.2: remove passes outright). Threshold is env-parameterised —
-        # GPQ_DRIVER_FINALIZE_MAX_ENTRIES=0 forces the distributed path.
-        pdf = entries.toPandas()
-        entries.unpersist()
-        return _finalize_entries_driver(
-            pdf, output_path, shard_dir, bounds, config, codec,
-            total_features, zmin, zmax)
-
-    root_dir_bytes = b""
-    n_coalesced = 0
-    n_blobs = 0
-    data_len = 0
-    features_per_zoom: dict[int, int] = {}
-    copy_plan = None
-    if n_addressed:
-        features_per_zoom = {
-            int(r[0]): int(r[1])
-            for r in entries.groupBy("z").agg(F.sum("n_features")).collect()
-        }
-        # winner blob per (content_hash, raw_len): first occurrence in
-        # GLOBAL TILE ORDER = the entry with the minimum tile_id (exact
-        # single-writer semantics; tile_ids are unique per entry, so no
-        # tie-break is needed). Partitioning of the heavy shuffle is hash,
-        # so (pid, local_off) carries no global order — tile_id does.
-        winners = (
-            entries.groupBy("content_hash", "raw_len")
-            .agg(
-                F.min("tile_id").alias("win_tile"),
-                F.min_by(F.struct("pid", "local_off", "blob_len"),
-                         F.col("tile_id")).alias("w"),
-            )
-            .select("content_hash", "raw_len", "win_tile",
-                    F.col("w.pid").alias("pid"),
-                    F.col("w.local_off").alias("local_off"),
-                    F.col("w.blob_len").alias("blob_len"))
-            .repartitionByRange(max(config.shuffle_partitions or 8, 8),
-                                "win_tile")
-            .sortWithinPartitions("win_tile")
-            .withColumn("wpid", F.spark_partition_id())
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # two-phase prefix sum over win_tile order: per-range-partition
-        # totals to the driver (O(partitions)), cumulative bases back in
-        per_part = winners.groupBy("wpid").agg(
-            F.sum("blob_len").alias("bytes"), F.count("*").alias("cnt")
-        ).orderBy("wpid").collect()
-        base_rows = []
-        acc = 0
-        for r in per_part:
-            base_rows.append((int(r["wpid"]), acc))
-            acc += int(r["bytes"])
-            n_blobs += int(r["cnt"])
-        data_len = acc
-        base_df = spark.createDataFrame(base_rows, "wpid int, base long")
-        wpref = (
-            Window.partitionBy("wpid").orderBy("win_tile")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        woffs = (
-            winners
-            .withColumn("prefix",
-                        F.coalesce(F.sum("blob_len").over(wpref), F.lit(0)))
-            .join(F.broadcast(base_df), "wpid")
-            .select(
-                "content_hash", "raw_len",
-                (F.col("base") + F.col("prefix")).alias("final_off"),
-                F.col("blob_len").alias("final_len"),
-            )
-        )
-        # final directory entries: one range shuffle of 24-byte rows, then
-        # per-partition coalesce + varint encode on the executors
-        parts = config.shuffle_partitions
-        ent = (
-            entries.select("tile_id", "content_hash", "raw_len")
-            .join(woffs, ["content_hash", "raw_len"])
-            .select("tile_id", F.col("final_off").alias("off"),
-                    F.col("final_len").alias("len"))
-        )
-        ent = (
-            ent.repartitionByRange(parts, "tile_id")
-            if parts else ent.repartitionByRange("tile_id")
-        ).sortWithinPartitions("tile_id")
-        leaf_tmp = tempfile.TemporaryFile()
-        try:
-            root_dir_bytes, n_coalesced, leaf_len = \
-                _assemble_directory_stream(ent, leaf_tmp,
-                                           config.leaf_max_entries)
-        except BaseException:
-            leaf_tmp.close()  # a failed finalize must not leak the spill fd
-            raise
-        # stream the winner list in win_tile order (== final data offset
-        # order) for the copy loop — O(1) driver memory; blobs are read
-        # from their shard files by (pid, local_off) seeks. NO orderBy:
-        # `winners` is already range-partitioned AND sorted within
-        # partitions by win_tile (persisted that way above), and
-        # toLocalIterator yields partitions in index order — an orderBy
-        # here would re-run a full sort exchange once PER PARTITION JOB
-        # that toLocalIterator launches.
-        copy_plan = winners.select("pid", "local_off", "blob_len")
-    else:
-        head = bytearray()
-        P.encode_varint(0, head)
-        root_dir_bytes = bytes(head)
-        leaf_tmp = None
-        leaf_len = 0
-
-    root_dir = P.compress(root_dir_bytes, P.COMPRESSION_GZIP)
+    root_dir = P.compress(plan.root_raw, P.COMPRESSION_GZIP)
+    zooms = plan.features_per_zoom
     tilestats = {
-        "total_features": total_features,
-        "features_per_zoom": {str(k): v
-                              for k, v in sorted(features_per_zoom.items())},
+        "total_features": sum(zooms.values()),
+        "features_per_zoom": {str(k): v for k, v in sorted(zooms.items())},
     }
     meta = P.compress(
         P.metadata_json(config.layer_name, config.min_zoom, config.max_zoom,
                         config.layer_fields or {}, tilestats),
         P.COMPRESSION_GZIP,
     )
+    if not n_addressed:
+        bounds = (-180.0, -85.0, 180.0, 85.0)
     leaf_base = P.HEADER_SIZE + len(root_dir) + len(meta)
     hdr = P.Header(
         root_dir_offset=P.HEADER_SIZE,
         root_dir_length=len(root_dir),
         json_metadata_offset=P.HEADER_SIZE + len(root_dir),
         json_metadata_length=len(meta),
-        leaf_dirs_offset=leaf_base if leaf_len else 0,
-        leaf_dirs_length=leaf_len,
-        tile_data_offset=leaf_base + leaf_len,
-        tile_data_length=data_len,
+        leaf_dirs_offset=leaf_base if plan.leaf_len else 0,
+        leaf_dirs_length=plan.leaf_len,
+        tile_data_offset=leaf_base + plan.leaf_len,
+        tile_data_length=plan.data_len,
         addressed_tiles_count=n_addressed,
-        tile_entries_count=n_coalesced,
-        tile_contents_count=n_blobs,
+        tile_entries_count=plan.n_coalesced,
+        tile_contents_count=plan.n_blobs,
         clustered=True,
         internal_compression=P.COMPRESSION_GZIP,
         tile_compression=codec,
         tile_type=P.TILETYPE_MVT,
-        min_zoom=zmin,
-        max_zoom=zmax,
-        min_lon=bounds[0] if n_addressed else -180.0,
-        min_lat=bounds[1] if n_addressed else -85.0,
-        max_lon=bounds[2] if n_addressed else 180.0,
-        max_lat=bounds[3] if n_addressed else 85.0,
+        min_zoom=min(zooms, default=config.min_zoom),
+        max_zoom=max(zooms, default=config.max_zoom),
+        min_lon=bounds[0],
+        min_lat=bounds[1],
+        max_lon=bounds[2],
+        max_lat=bounds[3],
     )
+    # true LRU of open shard files: blobs arrive in tile order but live in
+    # hash-partitioned shards, so pids interleave — plain dict.popitem()
+    # would evict the handle just opened (LIFO) and churn open/close per
+    # blob beyond the cap
+    handles: OrderedDict[int, object] = OrderedDict()
     with open(output_path, "wb") as out_f:
         out_f.write(hdr.to_bytes())
         out_f.write(root_dir)
         out_f.write(meta)
-        if leaf_tmp is not None and leaf_len:
-            import shutil
-
-            leaf_tmp.seek(0)
-            shutil.copyfileobj(leaf_tmp, out_f, length=1 << 20)
-        if leaf_tmp is not None:
-            leaf_tmp.close()
-        if copy_plan is not None:
-            from collections import OrderedDict
-
-            # true LRU of open shard files: blobs stream in tile order but
-            # live in hash-partitioned shards, so pids interleave — plain
-            # dict.popitem() would evict the handle just opened (LIFO) and
-            # churn open/close per blob beyond the cap
-            handles: OrderedDict[int, object] = OrderedDict()
-            try:
-                for r in copy_plan.toLocalIterator(prefetchPartitions=True):
-                    pid = int(r["pid"])
-                    sf = handles.get(pid)
-                    if sf is None:
-                        if len(handles) >= 64:
-                            _, old = handles.popitem(last=False)
-                            old.close()
-                        sf = handles[pid] = open(os.path.join(
-                            shard_dir, f"shard_{pid:05d}.bin"), "rb")
-                    else:
-                        handles.move_to_end(pid)
-                    sf.seek(r["local_off"])
-                    out_f.write(sf.read(r["blob_len"]))
-            finally:
-                for sf in handles.values():
-                    sf.close()
-    if n_addressed:
-        winners.unpersist()
-    entries.unpersist()
-    return {
-        "tiles": n_addressed,
-        "features": total_features,
-        "min_zoom": hdr.min_zoom,
-        "max_zoom": hdr.max_zoom,
-        "unique_blobs": n_blobs,
-        "bounds": bounds,
-    }
+        leaf_spill.seek(0)
+        shutil.copyfileobj(leaf_spill, out_f, length=1 << 20)
+        try:
+            for pid, local_off, blob_len in plan.blobs:
+                sf = handles.get(pid)
+                if sf is None:
+                    if len(handles) >= 64:
+                        handles.popitem(last=False)[1].close()
+                    sf = handles[pid] = open(os.path.join(
+                        shard_dir, f"shard_{pid:05d}.bin"), "rb")
+                else:
+                    handles.move_to_end(pid)
+                sf.seek(local_off)
+                out_f.write(sf.read(blob_len))
+        finally:
+            for sf in handles.values():
+                sf.close()
+    return hdr
 
 
 WORLD_BOUNDS = (-180.0, -85.0511287798066, 180.0, 85.0511287798066)
@@ -2764,7 +2769,7 @@ WORLD_BOUNDS = (-180.0, -85.0511287798066, 180.0, 85.0511287798066)
 
 def _resolve_inputs(features: DataFrame, config: TilerConfig,
                     bounds: tuple | None, premerge) -> tuple[tuple, bool]:
-    """The sinks' shared prologue -> (bounds, premerge as a bool).
+    """The sink's prologue -> (bounds, premerge as a bool).
 
     Without given bounds, ONE job computes them and also the
     premerge='auto' statistic, the mean WKB payload over every row (the
@@ -2792,21 +2797,75 @@ def _resolve_inputs(features: DataFrame, config: TilerConfig,
     return bounds, bool(premerge)
 
 
+def _archive_tiles(tiles: DataFrame, output_path: str, config: TilerConfig,
+                   bounds: tuple, shard_dir: str | None = None,
+                   progress: _Progress | None = None) -> dict:
+    """Tile frame -> archive: the shard writer, then ``_finalize_shards``.
+
+    Shard files go to ``shard_dir`` (storage visible to executors and the
+    driver), else to a driver-local temp dir that is always removed. Under
+    a local master executors write that dir themselves; under a cluster
+    master they cannot reach it, so the blobs stream to the driver in the
+    entry rows instead (``_stream_blobs``). Either way the same finalize
+    reads the same shard files."""
+    import shutil
+    import tempfile
+
+    from .kernels import pmtiles as P
+
+    codec = P.CODEC_BY_NAME[config.tile_compression]
+    stream = _stream_blobs(tiles.sparkSession, shard_dir)
+    own_dir = shard_dir is None
+    shard_dir = shard_dir or tempfile.mkdtemp(prefix="gpq_shards_")
+    try:
+        entries = tiles.withColumn(
+            "pid", F.spark_partition_id()
+        ).mapInPandas(_make_shard_writer(
+            None if stream else shard_dir, codec,
+            _expected_codec_backend(tiles, codec)),
+            schema=SHARD_BLOB_ENTRIES_SCHEMA if stream
+            else SHARD_ENTRIES_SCHEMA)
+        return _finalize_shards(entries, output_path, shard_dir, bounds,
+                                config, codec, progress)
+    finally:
+        if own_dir:
+            shutil.rmtree(shard_dir, ignore_errors=True)
+
+
+def _convert(features: DataFrame, output_path: str,
+             config: TilerConfig | None, bounds: tuple | None, premerge,
+             shard_dir: str | None = None,
+             progress: Callable[[ProgressEvent], None] | None = None,
+             progress_poll_sec: float = 1.0) -> dict:
+    """The one sink body behind ``convert`` and ``convert_sharded``:
+    bounds and the layout choice, the hash-shuffled tile plan (no
+    persist: the fan-out runs once, as the shuffle's map stage), then
+    ``_archive_tiles``."""
+    config = (config or TilerConfig()).validate()
+    metrics = PipelineMetrics.create(features.sparkSession)
+    prog = _Progress(progress, metrics, progress_poll_sec)
+    prog.emit("bounds", "start")
+    bounds, premerge = _resolve_inputs(features, config, bounds, premerge)
+    prog.emit("bounds", "complete", bounds=bounds)
+    tiles = _tile_plan(features, config, premerge=premerge,
+                       props=config.write_properties, by_range=False,
+                       metrics=metrics)
+    stats = _archive_tiles(tiles, output_path, config, bounds, shard_dir,
+                           prog)
+    stats["metrics"] = metrics.as_dict()
+    return stats
+
+
 def convert_sharded(features: DataFrame, output_path: str,
                     config: TilerConfig | None = None,
                     bounds: tuple[float, float, float, float] | None = None,
                     shard_dir: str | None = None,
                     premerge: bool | str = "auto") -> dict:
-    """Scale-out sink: executors write per-partition shard files
-    (compressed blobs, in-shard dedup), then ``_finalize_sharded_distributed``
-    dedups blobs across shards, lays out the data section and writes the
-    directory — output byte-identical to ``convert``'s single-writer
-    archive.
-
-    This removes the driver bottlenecks of the streaming sink: per-blob
-    gzip on the driver, and all tile bytes crossing one NIC. Past
-    ``driver_finalize_max_entries`` the finalize runs on executors too, so
-    10^8+ tile archives never materialize an entry list on the driver.
+    """``convert`` with a caller-chosen ``shard_dir``: storage visible to
+    BOTH executors and the driver (NFS/fuse mount on a real cluster),
+    where executors write the compressed, in-shard-deduplicated blobs.
+    Without it the shard files live in a driver-local temp dir (see
+    ``_archive_tiles``).
 
     Cross-shard duplicate blobs: a blob first seen in shard A and again in
     shard B is compressed and written into BOTH shard files (in-shard dedup
@@ -2815,48 +2874,9 @@ def convert_sharded(features: DataFrame, output_path: str,
     reference's single writer, and avoiding it would need an extra global
     pre-pass over uncompressed tile bytes that costs more than the dead
     shard bytes it saves (temp shards are deleted after assembly).
-
-    ``shard_dir`` must be storage visible to BOTH executors and the driver
-    (NFS/fuse mount on a real cluster). The default driver-local tempdir is
-    only valid under a local[*] master, and that is enforced: a non-local
-    master without an explicit shard_dir raises rather than producing an
-    archive that silently misses every remote executor's shards.
     """
-    import shutil
-    import tempfile
-
-    from .kernels import pmtiles as P
-
-    config = (config or TilerConfig()).validate()
-    master = features.sparkSession.conf.get("spark.master", "")
-    if shard_dir is None and not master.startswith("local"):
-        raise ValueError(
-            "convert_sharded: shard_dir defaults to a driver-local tempdir, "
-            f"which executors cannot reach under master={master!r}. Pass "
-            "shard_dir= on shared storage (visible to executors and driver)."
-        )
-    bounds, premerge = _resolve_inputs(features, config, bounds, premerge)
-    codec = P.CODEC_BY_NAME[config.tile_compression]
-    own_dir = shard_dir is None
-    shard_dir = shard_dir or tempfile.mkdtemp(prefix="gpq_shards_")
-    try:
-        # NO persist and NO range exchange on the heavy data: a hash
-        # shuffle on tile_id co-locates each tile (the encoder's only
-        # requirement), so the fan-out executes exactly once as the
-        # shuffle map stage. Global tile order is restored later on the
-        # 40-byte entry rows only.
-        tiles, _ = _tile_plan(features, config, premerge=premerge,
-                              props=config.write_properties, by_range=False)
-        entries_df = tiles.withColumn(
-            "pid", F.spark_partition_id()
-        ).mapInPandas(_make_shard_writer(
-            shard_dir, codec, _expected_codec_backend(features, codec)),
-            schema=SHARD_ENTRIES_SCHEMA)
-        return _finalize_sharded_distributed(
-            entries_df, output_path, shard_dir, bounds, config, codec)
-    finally:
-        if own_dir:
-            shutil.rmtree(shard_dir, ignore_errors=True)
+    return _convert(features, output_path, config, bounds, premerge,
+                    shard_dir=shard_dir)
 
 
 def convert(features: DataFrame, output_path: str, config: TilerConfig | None = None,
@@ -2866,102 +2886,16 @@ def convert(features: DataFrame, output_path: str, config: TilerConfig | None = 
              premerge: bool | str = "auto") -> dict:
     """End-to-end: features DataFrame -> single .pmtiles at output_path.
 
+    Executors encode and compress the tiles and write per-partition shard
+    files; the driver then lays out and writes the archive — past
+    DRIVER_FINALIZE_MAX_ENTRIES entries with the layout work on the
+    executors too, so driver memory stays bounded at 10^8+ tiles.
     Returns summary stats (incl. accumulator-backed per-stage row counts).
-    Tiles stream to the driver in tile_id order via toLocalIterator (O(1)
-    driver memory, like the reference's temp-file writer,
-    pmtiles_writer.rs:1000-1019). ``progress`` receives ordered
-    ProgressEvents (phase start/progress/complete, pipeline.rs:41-77 analog)
-    — tile-stream progress fires every 8192 tiles with live accumulator
-    row counts, and a driver-side poller thread additionally emits
-    'fanout' progress events (Phase1Progress analog, pipeline.rs:41-77)
-    every ``progress_poll_sec`` while the accumulators move, so the longest
-    phase is visible before the first tile reaches the driver.
+    ``progress`` receives ordered ProgressEvents (phase
+    start/progress/complete, pipeline.rs:41-77 analog): 'bounds', then
+    'fanout' and 'tiles' — whose progress events a driver thread emits
+    from the live accumulators every ``progress_poll_sec`` while they
+    move — then 'archive'.
     """
-    import threading
-
-    from pyspark import StorageLevel
-
-    from .kernels import pmtiles as P
-
-    def emit(phase: str, kind: str, **info) -> None:
-        if progress is not None:
-            progress(ProgressEvent(phase, kind, info))
-
-    config = (config or TilerConfig()).validate()
-    metrics = PipelineMetrics.create(features.sparkSession)
-    emit("bounds", "start")
-    bounds, premerge = _resolve_inputs(features, config, bounds, premerge)
-    emit("bounds", "complete", bounds=bounds)
-
-    # The single-writer stream needs GLOBAL tile order, so the tile
-    # shuffle is a range partition, whose SAMPLING job would re-execute
-    # the whole fan-out: the map side is persisted to disk instead (on the
-    # premerge layout that is the small framed messages, not the f64 WKB).
-    # This is the Spark analog of the reference writing phase-1 runs to
-    # disk before its phase-2 external sort (external_sort.rs:99-189).
-    tiles, side = _tile_plan(features, config, premerge=premerge,
-                             props=config.write_properties, by_range=True,
-                             metrics=metrics)
-    side.persist(StorageLevel.DISK_ONLY)
-
-    codec = P.CODEC_BY_NAME[config.tile_compression]
-    asm = P.PMTilesAssembler(
-        tile_compression=codec,
-        layer_name=config.layer_name,
-        min_zoom=config.min_zoom,
-        max_zoom=config.max_zoom,
-        fields=config.layer_fields,
-        leaf_max_entries=config.leaf_max_entries,
-    )
-    # fan-out phase progress: the fan-out executes lazily while the tile
-    # stream below drains, so poll the accumulators from a driver thread
-    # and emit a 'fanout' progress event whenever features_in advances
-    stop_poll = threading.Event()
-    poller = None
-    if progress is not None:
-        emit("fanout", "start")
-
-        def _poll() -> None:
-            last = -1
-            while not stop_poll.wait(progress_poll_sec):
-                cur = int(metrics.features_in.value)
-                if cur != last:
-                    last = cur
-                    emit("fanout", "progress", **metrics.as_dict())
-
-        poller = threading.Thread(target=_poll, daemon=True)
-        poller.start()
-
-    emit("tiles", "start")
-    n_tiles = 0
-    try:
-        for row in tiles.toLocalIterator(prefetchPartitions=True):
-            asm.add_tile(row.tile_id, row.z, bytes(row.mvt), row.content_hash, row.n_features)
-            n_tiles += 1
-            if progress is not None and n_tiles % 8192 == 0:
-                emit("tiles", "progress", tiles=n_tiles, **metrics.as_dict())
-    finally:
-        # an exception mid-stream must not leave the daemon poller polling
-        # a dead accumulator or the fan-out cache pinned for the session
-        # (ADVICE r3)
-        if poller is not None:
-            stop_poll.set()
-            poller.join()
-        side.unpersist()
-    if poller is not None:
-        emit("fanout", "complete", **metrics.as_dict())
-    emit("tiles", "complete", tiles=n_tiles, **metrics.as_dict())
-    asm.bounds = [bounds[0], bounds[1], bounds[2], bounds[3]]
-    emit("archive", "start")
-    hdr = asm.finalize(output_path)
-    emit("archive", "complete", path=output_path,
-         unique_blobs=hdr.tile_contents_count)
-    return {
-        "tiles": n_tiles,
-        "features": asm.total_features,
-        "min_zoom": hdr.min_zoom,
-        "max_zoom": hdr.max_zoom,
-        "unique_blobs": hdr.tile_contents_count,
-        "bounds": bounds,
-        "metrics": metrics.as_dict(),
-    }
+    return _convert(features, output_path, config, bounds, premerge,
+                    progress=progress, progress_poll_sec=progress_poll_sec)

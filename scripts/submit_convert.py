@@ -4,7 +4,7 @@
     spark-submit --py-files dist/gpq_tiles_spark.zip \
         scripts/submit_convert.py INPUT OUTPUT.pmtiles \
         [--min-zoom 0] [--max-zoom 14] [--layer-name features] \
-        [--compression gzip|none|zstd|brotli] [--sharded] [--progress] \
+        [--compression gzip|none|zstd|brotli] [--progress] \
         [--work-dir DIR (checkpointed)]
 
 INPUT is a parquet path of interleaved documents (doc_id, spans) or — with
@@ -28,9 +28,6 @@ def main() -> None:
                    help="zstd works via the zstandard package or a system "
                         "libzstd (ctypes); brotli requires the lib "
                         "installed (import-gated)")
-    p.add_argument("--sharded", action="store_true",
-                   help="executor-written shard files + driver concat "
-                        "(byte-identical archive; parallel compression)")
     p.add_argument("--geoparquet", action="store_true")
     p.add_argument("--work-dir", default=None, help="enable checkpoint/resume")
     p.add_argument("--feature-id-mode", default="hash", choices=["hash", "rownum"])
@@ -94,19 +91,14 @@ def main() -> None:
                 "build props via gpq_tiles_spark.pipeline.encode_props_column"
             )
 
-    if args.sharded:
-        from gpq_tiles_spark.pipeline import convert_sharded
+    from gpq_tiles_spark.pipeline import convert
 
-        stats = convert_sharded(feats, args.output, cfg)
-    else:
-        from gpq_tiles_spark.pipeline import convert
+    progress = None
+    if args.progress:
+        def progress(ev):  # noqa: ANN001 - ProgressEvent
+            print(f"[{ev.phase}] {ev.kind} {ev.info}")
 
-        progress = None
-        if args.progress:
-            def progress(ev):  # noqa: ANN001 - ProgressEvent
-                print(f"[{ev.phase}] {ev.kind} {ev.info}")
-
-        stats = convert(feats, args.output, cfg, progress=progress)
+    stats = convert(feats, args.output, cfg, progress=progress)
     print(stats)
 
 

@@ -5,8 +5,9 @@ entry chunks to the PMTiles leaf section (root entries with
 run_length==0 — the spec two-level layout the round-4 READER already
 consumes). These tests pin: spec invariants on our own leaf archive,
 read_tile/PMTilesReader round-trips, byte-identity between the
-single-writer and distributed finalize paths in leaf mode, and bounded
-driver memory on a 10^6-entry synthetic archive.
+PMTilesAssembler oracle and both sink finalizes (driver and distributed)
+in leaf mode, and bounded driver memory on a 10^6-entry synthetic archive
+through the distributed finalize.
 """
 
 import gzip
@@ -250,12 +251,13 @@ def test_leaf_max_entries_knob(tmp_path):
 
 
 def test_leaf_max_entries_byte_parity_across_finalize_paths(
-        spark, tmp_path):
-    """Single-writer and distributed finalize must stay byte-identical
-    when the knob moves the split."""
+        spark, tmp_path, monkeypatch):
+    """The PMTilesAssembler oracle and both sink finalizes (driver, then
+    distributed) must stay byte-identical when the knob moves the
+    split."""
+    from gpq_tiles_spark import pipeline as PL
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.kernels.pmtiles import COMPRESSION_GZIP, compress
-    from gpq_tiles_spark.pipeline import _finalize_sharded_distributed
 
     tiles = _make_tiles(N_LEAF)
     single = str(tmp_path / "single.pmtiles")
@@ -268,13 +270,15 @@ def test_leaf_max_entries_byte_parity_across_finalize_paths(
     shard_dir = str(tmp_path / "shards")
     ent = _synthetic_entries(
         spark, tiles, shard_dir, lambda m: compress(m, COMPRESSION_GZIP))
-    out = str(tmp_path / "dist.pmtiles")
     cfg = TilerConfig(min_zoom=0, max_zoom=8, shuffle_partitions=8,
                       leaf_max_entries=1000)
-    _finalize_sharded_distributed(
-        ent, out, shard_dir, (-10.0, -10.0, 10.0, 10.0), cfg,
-        COMPRESSION_GZIP)
-    assert open(single, "rb").read() == open(out, "rb").read()
+    for path in ("driver", "distributed"):
+        if path == "distributed":
+            monkeypatch.setattr(PL, "DRIVER_FINALIZE_MAX_ENTRIES", 0)
+        out = str(tmp_path / f"{path}.pmtiles")
+        PL._finalize_shards(ent, out, shard_dir, (-10.0, -10.0, 10.0, 10.0),
+                            cfg, COMPRESSION_GZIP)
+        assert open(single, "rb").read() == open(out, "rb").read(), path
 
 
 def _synthetic_entries(spark, tiles, shard_dir, codec_blobs):
@@ -295,35 +299,41 @@ def _synthetic_entries(spark, tiles, shard_dir, codec_blobs):
 
 
 def test_distributed_finalize_matches_single_writer_in_leaf_mode(
-        spark, tmp_path, leaf_archive):
-    """_finalize_sharded_distributed must produce the BYTE-identical
-    archive to PMTilesAssembler at leaf scale (same deterministic split)."""
+        spark, tmp_path, leaf_archive, monkeypatch):
+    """Both sink finalizes (driver, then the forced distributed one) must
+    produce the BYTE-identical archive to PMTilesAssembler at leaf scale
+    (same deterministic split)."""
+    from gpq_tiles_spark import pipeline as PL
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.kernels.pmtiles import COMPRESSION_GZIP, compress
-    from gpq_tiles_spark.pipeline import _finalize_sharded_distributed
 
     single_path, tiles = leaf_archive
     shard_dir = str(tmp_path / "shards")
     ent = _synthetic_entries(
         spark, tiles, shard_dir, lambda m: compress(m, COMPRESSION_GZIP))
-    out = str(tmp_path / "dist.pmtiles")
     cfg = TilerConfig(min_zoom=0, max_zoom=8, shuffle_partitions=8)
-    _finalize_sharded_distributed(
-        ent, out, shard_dir, (-10.0, -10.0, 10.0, 10.0), cfg,
-        COMPRESSION_GZIP)
     a = open(single_path, "rb").read()
-    b = open(out, "rb").read()
-    assert a == b, "leaf-mode archives differ between finalize paths"
+    for path in ("driver", "distributed"):
+        if path == "distributed":
+            monkeypatch.setattr(PL, "DRIVER_FINALIZE_MAX_ENTRIES", 0)
+        out = str(tmp_path / f"{path}.pmtiles")
+        PL._finalize_shards(ent, out, shard_dir, (-10.0, -10.0, 10.0, 10.0),
+                            cfg, COMPRESSION_GZIP)
+        assert a == open(out, "rb").read(), (
+            f"leaf-mode archive of the {path} finalize differs")
 
 
-def test_million_entry_finalize_streams_and_stays_bounded(spark, tmp_path):
-    """10^6 directory entries through _finalize_sharded_distributed: the
+def test_million_entry_finalize_streams_and_stays_bounded(spark, tmp_path,
+                                                          monkeypatch):
+    """10^6 directory entries through the forced distributed finalize: the
     leaf path engages, the archive round-trips, and driver peak RSS stays
     bounded (entry bytes never accumulate on the driver)."""
+    from gpq_tiles_spark import pipeline as PL
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.kernels.pmtiles import COMPRESSION_GZIP
-    from gpq_tiles_spark.pipeline import _finalize_sharded_distributed
     from pyspark.sql import functions as F
+
+    monkeypatch.setattr(PL, "DRIVER_FINALIZE_MAX_ENTRIES", 0)
 
     n = 1_000_000
     n_blobs = 64
@@ -352,7 +362,7 @@ def test_million_entry_finalize_streams_and_stays_bounded(spark, tmp_path):
     cfg = TilerConfig(min_zoom=0, max_zoom=10, shuffle_partitions=32)
     rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024  # MiB
     t0 = time.perf_counter()
-    stats = _finalize_sharded_distributed(
+    stats = PL._finalize_shards(
         ent, out, shard_dir, (-10.0, -10.0, 10.0, 10.0), cfg,
         COMPRESSION_GZIP)
     elapsed = time.perf_counter() - t0
@@ -380,10 +390,13 @@ def test_million_entry_finalize_streams_and_stays_bounded(spark, tmp_path):
 def test_full_pipeline_leaf_scale_byte_identical(spark, tmp_path):
     """Capstone: the REAL pipeline (extract-less point corpus -> fan-out ->
     shuffle -> encode -> sink) at a tile count past ROOT_MAX_ENTRIES must
-    produce byte-identical single-writer and sharded archives, both in
-    leaf mode, both readable."""
+    write, through both entry points, the leaf-mode archive the
+    independent PMTilesAssembler oracle writes from
+    ``encode_tiles(...).orderBy("tile_id")``; the archive reads back."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.pipeline import convert, convert_sharded
+
+    from .test_pinned_archives import assembler_archive
 
     n = 6000
     rng = np.random.default_rng(11)
@@ -405,10 +418,13 @@ def test_full_pipeline_leaf_scale_byte_identical(spark, tmp_path):
     cfg = TilerConfig(min_zoom=9, max_zoom=9, shuffle_partitions=8)
     p1 = str(tmp_path / "single_leaf.pmtiles")
     p2 = str(tmp_path / "sharded_leaf.pmtiles")
+    p3 = str(tmp_path / "oracle_leaf.pmtiles")
     s1 = convert(feats, p1, cfg)
     s2 = convert_sharded(feats, p2, cfg)
+    assembler_archive(feats, p3, cfg)
     assert s1["tiles"] == s2["tiles"] > ROOT_MAX_ENTRIES
-    a = open(p1, "rb").read()
+    a = open(p3, "rb").read()
+    assert a == open(p1, "rb").read()
     assert a == open(p2, "rb").read()
     hdr = Header.from_bytes(a[:HEADER_SIZE])
     assert hdr.leaf_dirs_length > 0

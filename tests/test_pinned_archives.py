@@ -1,27 +1,35 @@
-"""Pinned archive digests: the byte-parity oracle for the tile plans.
+"""Pinned archive digests: the byte-parity oracle for the tile plans and
+the sink.
 
 Each digest below was recorded before the salted two-phase encode and the
 collect-everything sharded finalize were deleted, from archives on which
-every layout of the time agreed: ``convert`` and ``convert_sharded``, WKB
-and premerge layouts, the salted encode on both sinks and the legacy
-finalize. The remaining plans must keep reproducing them, so a deleted
-layout's parity tests are replaced by these hashes instead of being
-dropped. Inputs: the ``docs_table`` fixture (400 docs, seed 42) through
+every layout of the time agreed: the single-writer ``convert`` stream and
+``convert_sharded``, WKB and premerge layouts, the salted encode on both
+sinks and the legacy finalize. Now that ``convert`` and
+``convert_sharded`` are one sink, these hashes (and ``assembler_archive``,
+the independent streaming writer) are what a sink change is checked
+against. Inputs: the ``docs_table`` fixture (400 docs, seed 42) through
 ``extract_features``.
 """
 
 import hashlib
+import os
 import struct
+import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
+from gpq_tiles_spark import pipeline as PL
 from gpq_tiles_spark.config import TilerConfig
 from gpq_tiles_spark.extract import extract_features
+from gpq_tiles_spark.kernels.pmtiles import CODEC_BY_NAME, PMTilesAssembler
 from gpq_tiles_spark.pipeline import (
     convert,
     convert_sharded,
     encode_tiles,
     encode_tiles_premerge,
+    encode_tiles_with_props,
     fanout_records,
 )
 
@@ -58,6 +66,30 @@ def tile_map_sha256(tiles) -> tuple[str, int]:
     return h.hexdigest(), len(rows)
 
 
+def assembler_archive(feats, path, cfg) -> None:
+    """The independent archive oracle: ``PMTilesAssembler`` (the streaming
+    single-file writer in kernels/pmtiles.py, which shares no code with
+    the sink's finalize) fed the WKB-layout tile frame in tile_id order,
+    with the feature bounds the sink writes into the header."""
+    cfg = cfg.validate()
+    records = fanout_records(feats, cfg)
+    tiles = (encode_tiles_with_props(
+        records, feats.select("feature_id", "props"), cfg)
+        if cfg.write_properties else encode_tiles(records, cfg))
+    asm = PMTilesAssembler(
+        tile_compression=CODEC_BY_NAME[cfg.tile_compression],
+        layer_name=cfg.layer_name, min_zoom=cfg.min_zoom,
+        max_zoom=cfg.max_zoom, fields=cfg.layer_fields,
+        leaf_max_entries=cfg.leaf_max_entries)
+    for r in tiles.orderBy("tile_id").toLocalIterator():
+        asm.add_tile(r.tile_id, r.z, bytes(r.mvt), r.content_hash,
+                     r.n_features)
+    asm.bounds = list(feats.agg(F.min("lng_min"), F.min("lat_min"),
+                                F.max("lng_max"), F.max("lat_max")
+                                ).collect()[0])
+    asm.finalize(path)
+
+
 @pytest.fixture(scope="module")
 def feats(spark, docs_table):
     df = extract_features(spark.read.parquet(docs_table)).cache()
@@ -85,3 +117,48 @@ def test_tile_map_matches_pin(feats):
         encode_tiles(fanout_records(feats, cfg), cfg)) == PINNED_TILE_MAP
     assert tile_map_sha256(
         encode_tiles_premerge(feats, cfg)) == PINNED_TILE_MAP
+
+
+@pytest.mark.parametrize("name", ["z0_7_sp4", "z0_4"])
+def test_assembler_oracle_matches_pin(feats, tmp_path, name):
+    """The oracle itself reproduces the pins, so a test that compares a
+    sink with ``assembler_archive`` checks the pinned bytes' writer."""
+    kw, digest = PINNED_ARCHIVES[name]
+    path = str(tmp_path / f"{name}.pmtiles")
+    assembler_archive(feats, path, TilerConfig(**kw))
+    assert file_sha256(path) == digest
+
+
+@pytest.mark.parametrize("transport,finalize", [
+    ("file", "distributed"), ("stream", "driver"), ("stream", "distributed")])
+def test_transports_and_finalizes_match_pins(feats, tmp_path, monkeypatch,
+                                             transport, finalize):
+    """Every archive pin through both finalizes and both shard transports.
+    The blob-streaming transport (a cluster master with no shard_dir) is
+    forced under the local master: executors write no shard file, the
+    driver rebuilds every shard from the entry rows. No driver temp dir
+    may outlive the call."""
+    drained = []
+    drain = PL._drain_blobs
+
+    def spy(entries, shard_dir):
+        drained.append(shard_dir)
+        drain(entries, shard_dir)
+
+    monkeypatch.setattr(PL, "_drain_blobs", spy)
+    if transport == "stream":
+        monkeypatch.setattr(PL, "_stream_blobs",
+                            lambda spark, shard_dir: shard_dir is None)
+    if finalize == "distributed":
+        monkeypatch.setattr(PL, "DRIVER_FINALIZE_MAX_ENTRIES", 0)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    for name, sink in (("z0_7_sp4", convert), ("z0_4", convert_sharded),
+                       ("z0_4_cap2048", convert)):
+        kw, digest = PINNED_ARCHIVES[name]
+        path = str(tmp_path / f"{name}.pmtiles")
+        sink(feats, path, TilerConfig(**kw))
+        assert file_sha256(path) == digest, name
+    assert len(drained) == (3 if transport == "stream" else 0)
+    assert os.listdir(tmp) == []

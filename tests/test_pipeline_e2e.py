@@ -235,22 +235,27 @@ def test_zstd_brotli_gated(tmp_path):
 
 
 def test_convert_sharded_byte_identical(spark, docs_table, tmp_path):
-    """The scale-out sink (executor-written shard files + driver concat)
-    must produce the EXACT same archive bytes as the single-writer
-    convert() — same dedup decisions, offsets, directory, and header."""
+    """``convert`` and ``convert_sharded`` (with a caller-given shard_dir)
+    both write the z0-7 archive pinned while the single-writer stream and
+    the sharded sink agreed — same dedup decisions, offsets, directory,
+    and header."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.pipeline import convert, convert_sharded
 
+    from .test_pinned_archives import PINNED_ARCHIVES, file_sha256
+
     feats = extract_features(spark.read.parquet(docs_table))
-    cfg = TilerConfig(min_zoom=0, max_zoom=7, shuffle_partitions=4)
+    kw, digest = PINNED_ARCHIVES["z0_7_sp4"]
+    cfg = TilerConfig(**kw)
     p1 = str(tmp_path / "single.pmtiles")
     p2 = str(tmp_path / "sharded.pmtiles")
+    shard_dir = tmp_path / "shards"
+    shard_dir.mkdir()
     s1 = convert(feats, p1, cfg)
-    s2 = convert_sharded(feats, p2, cfg)
+    s2 = convert_sharded(feats, p2, cfg, shard_dir=str(shard_dir))
     assert s1["tiles"] == s2["tiles"]
     assert s1["unique_blobs"] == s2["unique_blobs"]
-    with open(p1, "rb") as f1, open(p2, "rb") as f2:
-        assert f1.read() == f2.read()
+    assert file_sha256(p1) == file_sha256(p2) == digest
 
 
 def test_encode_single_tile_matches_pipeline(spark, docs_table, small_config):
@@ -420,17 +425,20 @@ def test_antimeridian_and_polar_parity(spark):
 
 def test_premerge_paths_byte_identical(spark, docs_table, tmp_path):
     """Round-3 premerge encode: map-side per-record message encode +
-    reduce-side wrap must equal the single-writer archive byte-for-byte,
+    reduce-side wrap must equal the pinned z0-7 archive byte-for-byte,
     on BOTH the premerge default and the legacy WKB-shuffling fallback,
     including under tiny Arrow batches (cross-batch run carries through
     the list-pend wrap path)."""
     from gpq_tiles_spark.config import TilerConfig
     from gpq_tiles_spark.pipeline import convert, convert_sharded
 
+    from .test_pinned_archives import PINNED_ARCHIVES, file_sha256
+
     feats = extract_features(spark.read.parquet(docs_table))
     cfg = TilerConfig(min_zoom=0, max_zoom=7, shuffle_partitions=4)
     p_ref = str(tmp_path / "single.pmtiles")
     convert(feats, p_ref, cfg)
+    assert file_sha256(p_ref) == PINNED_ARCHIVES["z0_7_sp4"][1]
     with open(p_ref, "rb") as f:
         ref = f.read()
 
@@ -536,9 +544,9 @@ def test_premerge_auto_resolution(spark, docs_table):
 
 def test_convert_premerge_dense_corpus_byte_identical(spark, tmp_path):
     """A corpus that RESOLVES to premerge under 'auto' (600-vertex rings)
-    must produce identical bytes through convert (range-partitioned
-    premerge + persist), convert_sharded (hash premerge + distributed
-    finalize), and the forced WKB layout."""
+    must produce identical bytes through convert and convert_sharded on
+    the premerge layout, the forced WKB layout, and the independent
+    PMTilesAssembler oracle."""
     import numpy as np
     import pandas as pd
 
@@ -546,6 +554,8 @@ def test_convert_premerge_dense_corpus_byte_identical(spark, tmp_path):
     from gpq_tiles_spark.kernels import geom as G
     from gpq_tiles_spark.pipeline import (_resolve_premerge, convert,
                                           convert_sharded)
+
+    from .test_pinned_archives import assembler_archive
 
     rng = np.random.default_rng(77)
     rows = []
@@ -573,11 +583,14 @@ def test_convert_premerge_dense_corpus_byte_identical(spark, tmp_path):
     p1 = str(tmp_path / "single.pmtiles")
     p2 = str(tmp_path / "sharded.pmtiles")
     p3 = str(tmp_path / "wkb.pmtiles")
-    s1 = convert(feats, p1, cfg)                      # auto -> premerge+range
-    s2 = convert_sharded(feats, p2, cfg)              # auto -> premerge+hash
+    p4 = str(tmp_path / "oracle.pmtiles")
+    s1 = convert(feats, p1, cfg)                      # auto -> premerge
+    s2 = convert_sharded(feats, p2, cfg)              # auto -> premerge
     convert_sharded(feats, p3, cfg, premerge=False)   # forced WKB layout
+    assembler_archive(feats, p4, cfg)
     assert s1["tiles"] == s2["tiles"] > 0
     with open(p1, "rb") as f1, open(p2, "rb") as f2, open(p3, "rb") as f3:
         b1 = f1.read()
         assert b1 == f2.read()
         assert b1 == f3.read()
+    assert b1 == open(p4, "rb").read()

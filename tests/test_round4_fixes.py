@@ -68,6 +68,7 @@ def test_legacy_sharded_finalize_gated(spark, docs_table, tmp_path,
     finalize (driver-side and distributed) reproduce the z0-4 archive
     pinned while the legacy finalize agreed with them."""
     from gpq_tiles_spark.config import TilerConfig
+    from gpq_tiles_spark import pipeline as PL
     from gpq_tiles_spark.extract import extract_features
     from gpq_tiles_spark.pipeline import convert_sharded
 
@@ -81,7 +82,7 @@ def test_legacy_sharded_finalize_gated(spark, docs_table, tmp_path,
     p1 = str(tmp_path / "driver.pmtiles")
     p2 = str(tmp_path / "dist.pmtiles")
     convert_sharded(feats, p1, cfg)
-    monkeypatch.setenv("GPQ_DRIVER_FINALIZE_MAX_ENTRIES", "0")
+    monkeypatch.setattr(PL, "DRIVER_FINALIZE_MAX_ENTRIES", 0)
     convert_sharded(feats, p2, cfg)
     assert file_sha256(p1) == file_sha256(p2) == PINNED_ARCHIVES["z0_4"][1]
 

@@ -381,6 +381,36 @@ def test_shard_writer_rejects_backend_mismatch(tmp_path):
     assert len(out) == 1 and (tmp_path / "shard_00000.bin").exists()
 
 
+def test_blob_streaming_rows_and_drain_check(spark, tmp_path):
+    """The blob-streaming transport: without a shard_dir the shard writer
+    ships each first-in-shard blob once in its entry row (null on an
+    in-shard duplicate); the driver drain rebuilds the shard file from
+    those rows and fails loudly when a local_off misses its file
+    position."""
+    from gpq_tiles_spark.kernels import pmtiles as P
+    from gpq_tiles_spark.pipeline import (SHARD_BLOB_ENTRIES_SCHEMA,
+                                          _drain_blobs, _make_shard_writer)
+
+    pdf = pd.DataFrame({
+        "tile_id": [0, 1, 2], "z": [0, 1, 1], "content_hash": [7, 7, 9],
+        "mvt": [b"\x1a\x00", b"\x1a\x00", b"\x1a\x01"],
+        "n_features": [1, 1, 1], "pid": [0, 0, 0],
+    })
+    write = _make_shard_writer(None, P.COMPRESSION_GZIP)
+    out = pd.concat(list(write(iter([pdf]))), ignore_index=True)
+    assert out["blob"].isna().tolist() == [False, True, False]
+    assert out["local_off"].tolist()[:2] == [0, 0]
+    _drain_blobs(spark.createDataFrame(out, SHARD_BLOB_ENTRIES_SCHEMA),
+                 str(tmp_path))
+    assert (tmp_path / "shard_00000.bin").read_bytes() == (
+        out["blob"][0] + out["blob"][2])
+    bad = out.assign(local_off=out["local_off"] + 1)
+    (tmp_path / "bad").mkdir()
+    with pytest.raises(RuntimeError, match="file position"):
+        _drain_blobs(spark.createDataFrame(bad, SHARD_BLOB_ENTRIES_SCHEMA),
+                     str(tmp_path / "bad"))
+
+
 def test_budget_recheck_converges_in_few_rebuilds(monkeypatch):
     """The post-remap re-check must evict at least one live record per
     pass (eff capped below the kept set's cumsum), not shrink eff by a

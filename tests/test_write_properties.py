@@ -99,13 +99,20 @@ def test_property_filters(spark, prop_features, tmp_path):
 
 
 def test_props_sharded_byte_identical(spark, prop_features, tmp_path):
+    """Both sink entry points write the archive the independent
+    PMTilesAssembler oracle writes from the WKB+props tile frame."""
+    from .test_pinned_archives import assembler_archive
+
     cfg = TilerConfig(min_zoom=2, max_zoom=4, shuffle_partitions=4,
                       write_properties=True)
     p1 = str(tmp_path / "single.pmtiles")
     p2 = str(tmp_path / "sharded.pmtiles")
+    p3 = str(tmp_path / "oracle.pmtiles")
     convert(prop_features, p1, cfg)
     convert_sharded(prop_features, p2, cfg)
+    assembler_archive(prop_features, p3, cfg)
     assert open(p1, "rb").read() == open(p2, "rb").read()
+    assert open(p1, "rb").read() == open(p3, "rb").read()
 
 
 def test_props_requires_column_and_rejects_salted(spark, prop_features, tmp_path):
